@@ -61,6 +61,20 @@ def _level_pixels(metadata: dict, zoom: int) -> int:
     return tx * ty * bw * bh * max(1, len(metadata.get("bands", [])))
 
 
+def _time_keys(df: DataFrame) -> list[str]:
+    """The spec time columns ``df`` carries: overview tiles are built
+    per time step, grouped and keyed like the native rows."""
+    return [c for c in ("time_cf", "time_ts") if c in df.columns]
+
+
+def _level_schema(df: DataFrame, time_keys: list[str], bands) -> str:
+    return ", ".join(
+        ["block bigint"]
+        + [f"{k} {df.schema[k].dataType.simpleString()}" for k in time_keys]
+        + [f"{name} binary" for name, _, _ in bands]
+    )
+
+
 def _downsample(block: np.ndarray, method: str, nodata) -> np.ndarray:
     """2× downsample a (h, w) array to (h/2, w/2)."""
     h, w = block.shape
@@ -210,7 +224,8 @@ def build_level_halo(
     tile replicated to at most 4 groups (its own parent + the ≤3
     neighbors its outer corner touches). Groups that contain only halo
     tiles (no children of their own) emit nothing, matching
-    :func:`build_level` coverage semantics."""
+    :func:`build_levels_blocked` coverage semantics. Time-stepped
+    tiles group per step (:func:`_time_keys`)."""
     from raquet_spark.functions.quadbin import py_cell_to_tile, py_tile_to_cell
     from raquet_spark.session import ensure_package_shipped
 
@@ -228,6 +243,7 @@ def build_level_halo(
     wv = _weight_matrix(bh, pad, resampling)
     wh = _weight_matrix(bw, pad, resampling)
     m = 1 << parent_zoom
+    tkeys = _time_keys(df)
 
     children = (
         df.where(F.expr(qb.cell_to_zoom_sql("block", "spark")) == child_zoom)
@@ -261,11 +277,12 @@ def build_level_halo(
         if not pdf["core"].any():
             return pd.DataFrame({
                 "block": pd.Series([], dtype="int64"),
+                **{k: pdf[k].iloc[:0] for k in tkeys},
                 **{name: pd.Series([], dtype=object) for name, _, _ in bands},
             })
         parent = int(key[0])
         ax, ay, _ = py_cell_to_tile(parent)
-        out = {"block": [parent]}
+        out = {"block": [parent], **{k: [pdf[k].iloc[0]] for k in tkeys}}
         for name, btype, nodata in bands:
             dt = np.dtype(DTYPES[btype])
             mosaic = np.zeros((2 * bh + 2 * pad, 2 * bw + 2 * pad), dtype="f8")
@@ -300,11 +317,13 @@ def build_level_halo(
             out[name] = [encode_block(result.astype(dt).reshape(-1), btype, compression)]
         return pd.DataFrame(out)
 
-    schema = "block bigint, " + ", ".join(f"{name} binary" for name, _, _ in bands)
     routed = pin_group_width(
-        routed, "parent", approx_pixels=_level_pixels(metadata, child_zoom)
+        routed, "parent", *tkeys,
+        approx_pixels=_level_pixels(metadata, child_zoom),
     )
-    return routed.groupBy("parent").applyInPandas(assemble, schema=schema)
+    return routed.groupBy("parent", *tkeys).applyInPandas(
+        assemble, schema=_level_schema(df, tkeys, bands)
+    )
 
 
 def build_level(
@@ -313,48 +332,14 @@ def build_level(
     child_zoom: int,
     resampling: str = "average",
 ) -> DataFrame:
-    """Tiles at ``child_zoom - 1`` from tiles at ``child_zoom``."""
-    from raquet_spark.session import ensure_package_shipped
-
+    """Tiles at ``child_zoom - 1`` from tiles at ``child_zoom``: the
+    halo builder for the wide kernels, else one blocked pass of depth
+    one."""
     if resampling in _HALO_KERNELS:
         return build_level_halo(df, metadata, child_zoom, resampling)
-
-    ensure_package_shipped(df.sparkSession)
-    bands = [(b["name"], b["type"], parse_nodata(b.get("nodata"))) for b in metadata["bands"]]
-    bw = metadata["tiling"]["block_width"]
-    bh = metadata["tiling"]["block_height"]
-    compression = metadata.get("compression", "gzip")
-    parent_zoom = child_zoom - 1
-
-    children = (
-        df.where(F.expr(qb.cell_to_zoom_sql("block", "spark")) == child_zoom)
-        .withColumn("parent", F.expr(qb.cell_to_parent_sql("block", parent_zoom, "spark")))
-        .withColumn("cx", F.expr(qb.cell_to_x_sql("block", "spark")))
-        .withColumn("cy", F.expr(qb.cell_to_y_sql("block", "spark")))
+    return build_levels_blocked(
+        df, metadata, child_zoom, child_zoom - 1, resampling
     )
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        parent = key[0]
-        out = {"block": [parent]}
-        for name, btype, nodata in bands:
-            dt = np.dtype(DTYPES[btype])
-            fill = nodata if nodata is not None else (np.nan if dt.kind == "f" else 0)
-            mosaic = np.full((bh * 2, bw * 2), fill, dtype=dt)
-            for row in pdf.to_dict("records"):
-                if row[name] is None:
-                    continue
-                tile = decode_block(row[name], btype).reshape(bh, bw)
-                dx, dy = int(row["cx"]) & 1, int(row["cy"]) & 1
-                mosaic[dy * bh : (dy + 1) * bh, dx * bw : (dx + 1) * bw] = tile
-            down = _downsample(mosaic, resampling, nodata)
-            out[name] = [encode_block(down.reshape(-1), btype, compression)]
-        return pd.DataFrame(out)
-
-    schema = "block bigint, " + ", ".join(f"{name} binary" for name, _, _ in bands)
-    children = pin_group_width(
-        children, "parent", approx_pixels=_level_pixels(metadata, child_zoom)
-    )
-    return children.groupBy("parent").applyInPandas(assemble, schema=schema)
 
 
 def build_levels_blocked(
@@ -366,12 +351,13 @@ def build_levels_blocked(
 ) -> DataFrame:
     """All levels ``child_zoom - 1 .. target_zoom`` in ONE shuffle.
 
-    Tiles group by their ``target_zoom`` ancestor; inside each group a
+    Tiles group by their ``target_zoom`` ancestor (and time step,
+    :func:`_time_keys`, carried into the output); inside each group a
     single numpy pass assembles the (bh·2^k × bw·2^k) mosaic and
     downsamples it k times, emitting every intermediate level —
-    byte-identical to k sequential :func:`build_level` calls (each step
-    casts back to the band dtype before the next, matching the
-    level-at-a-time semantics). Intermediate levels are never shuffled:
+    byte-identical to k sequential depth-one passes (each step casts
+    back to the band dtype before the next). Intermediate levels are
+    never shuffled:
     vs per-level passes this is 1 shuffle instead of k, on the same
     total input. Group memory is bounded by 4^k child tiles, so callers
     cap k (see :func:`build_pyramid`'s ``levels_per_pass``)."""
@@ -385,6 +371,7 @@ def build_levels_blocked(
     compression = metadata.get("compression", "gzip")
     k = child_zoom - target_zoom
     n = 1 << k
+    tkeys = _time_keys(df)
 
     children = df.where(
         F.expr(qb.cell_to_zoom_sql("block", "spark")) == child_zoom
@@ -433,13 +420,17 @@ def build_levels_blocked(
                         out[name].append(
                             encode_block(tile.reshape(-1), btype, compression)
                         )
+        for key_col in tkeys:
+            out[key_col] = [pdf[key_col].iloc[0]] * len(out["block"])
         return pd.DataFrame(out)
 
-    schema = "block bigint, " + ", ".join(f"{name} binary" for name, _, _ in bands)
     children = pin_group_width(
-        children, "anc", approx_pixels=_level_pixels(metadata, child_zoom)
+        children, "anc", *tkeys,
+        approx_pixels=_level_pixels(metadata, child_zoom),
     )
-    return children.groupBy("anc").applyInPandas(assemble, schema=schema)
+    return children.groupBy("anc", *tkeys).applyInPandas(
+        assemble, schema=_level_schema(df, tkeys, bands)
+    )
 
 
 def build_pyramid(
@@ -486,8 +477,8 @@ def build_pyramid(
         z = target
     out = levels[0]
     for lvl in levels[1:]:
-        # native tiles may carry extra columns (stats, time, metadata);
-        # overview rows take nulls there — recompute stats downstream
+        # native tiles may carry extra columns (stats, metadata); overview
+        # rows keep the time columns and take nulls there — recompute stats downstream
         # with with_tile_stats if needed
         out = out.unionByName(lvl, allowMissingColumns=True)
     meta = dict(metadata)

@@ -1805,28 +1805,24 @@ def grib2_to_raquet(
     percentile: int | None = None,
 ):
     """GRIB2 → RaQuet tiles on the mercator grid, forecast steps as
-    ``time_cf`` — the same single-warp-shuffle + single-tiling-shuffle
-    pipeline as :func:`netcdf.netcdf_to_raquet` (the two formats carry
-    the same regular-lat/lon + time-steps shape). ``member``/
+    ``time_cf`` — the warp strategy is :func:`tiff_reader.import_tiles`'s,
+    as for :func:`netcdf.netcdf_to_raquet` (the two formats carry the
+    same grid + time-steps shape). ``member``/
     ``threshold``/``percentile`` select one ensemble member /
     probability threshold / percentile value out of a multi-member,
     exceedance, or percentile archive (PDT 4.1/4.11, 4.5/4.9, and
     4.6/4.10)."""
     from pyspark.sql import functions as F
 
-    from raquet_spark.core.metadata import BandMeta, build_metadata
-    from raquet_spark.operators.tile_stats import with_tile_stats
-    from raquet_spark.operators.tiling import from_pixel_table
-    from raquet_spark.sources.tiff_reader import (
-        _fused_gather_eligible,
-        _fused_gather_tiles,
-        _lonlat_corners,
-        _pick_zoom,
-        _resampled_pixels,
-        _tile_aligned_bounds,
-        gather_is_broadcast,
-    )
+    from raquet_spark.core.metadata import BandMeta
+    from raquet_spark.sources.tiff_reader import AGG_KERNELS, import_tiles
 
+    if resampling in AGG_KERNELS:
+        # the forward-map reducers take the affine transform as exact:
+        # not so on Gaussian, staggered or ragged-row grids
+        raise ValueError(
+            f"grib2 resampling {resampling!r} (near/bilinear/cubic)"
+        )
     g = read_grib2_structure(path)
     sel = select_messages(g["messages"], param, level, member, threshold,
                           percentile)
@@ -1835,61 +1831,32 @@ def grib2_to_raquet(
         param = (m0["param_category"], m0["param_number"])
     if level is None:
         level = (m0["level_type"], m0["level_value"])
-    info = _grib2_info(m0, path, nodata)
-    z = zoom if zoom is not None else _pick_zoom(info, block_size, "upper")
-    px = grib2_pixel_table(spark, g, param, level, member, threshold,
-                           percentile)
-    # bitmap-missing points were omitted; the warp gather wants dense
-    # rows only where data exists — absent sources resolve to nodata
-    px = px.withColumn("band_1", F.coalesce("band_1", F.lit(nodata)))
-    (w, s, e, n), (tx0, ty0, tx1, ty1) = _tile_aligned_bounds(
-        _lonlat_corners(info), z
-    )
     times = sorted({float(m["forecast_hours"]) for m in sel})
-    meta = build_metadata(
-        bands=[BandMeta(name="band_1", type="float64", nodata=nodata,
-                        colorinterp="gray")],
-        bounds=(w, s, e, n),
-        width=(tx1 - tx0 + 1) * block_size,
-        height=(ty1 - ty0 + 1) * block_size,
-        block_width=block_size,
-        block_height=block_size,
-        min_zoom=z,
-        max_zoom=z,
-        compression=compression,
-        tile_statistics=stats,
+
+    def decode(local):
+        # bitmap-missing points were omitted; the warp gather wants dense
+        # rows only where data exists — absent sources resolve to nodata
+        px = grib2_pixel_table(spark, g, param, level, member, threshold,
+                               percentile)
+        return px.withColumn("band_1", F.coalesce("band_1", F.lit(nodata)))
+
+    tiles, meta = import_tiles(
+        spark,
+        _grib2_info(m0, path, nodata),
+        [BandMeta(name="band_1", type="float64", nodata=nodata,
+                  colorinterp="gray")],
+        decode,
+        # every message is a packed bitstream to unpack: decode stays
+        # distributed
+        driver_decode=False,
+        zoom=zoom, block_size=block_size, compression=compression,
+        stats=stats, resampling=resampling,
+        time_key="time_cf" if len(times) > 1 else None,
+        n_steps=len(times),
     )
-    if _fused_gather_eligible(info, resampling, len(times)):
-        # join-free separable gather (r18): broadcast grid + index
-        # vectors, one map-only tile build (see _fused_gather_tiles);
-        # Gaussian (lat_centers) grids qualify — their fsy is the same
-        # driver-computed row vector the rowmap join used
-        tiles = _fused_gather_tiles(
-            spark, px, info, z, block_size, (tx0, ty0, tx1, ty1), meta,
-            compression, extra_key="time_cf" if len(times) > 1 else None,
-            resampling=resampling,
-        )
-    else:
-        pixels = _resampled_pixels(
-            spark, px, info, z, block_size, resampling, (tx0, ty0, tx1, ty1),
-            extra_cols=("time_cf",) if len(times) > 1 else (),
-            n_steps=len(times),
-        )
-        tiles = from_pixel_table(
-            pixels, meta, compression=compression,
-            extra_keys=((("time_cf", "double"),) if len(times) > 1 else ()),
-            # map-only assembly (r17): broadcast near gather over the
-            # block-major target grid → tile-contiguous pixels, no tiling
-            # exchange (see from_pixel_table)
-            aligned=(
-                resampling == "near" and gather_is_broadcast(info, len(times))
-            ),
-        )
     if len(times) > 1:
         meta["time"] = {
             "count": len(times), "values_cf": times,
             "cf:units": "hours since forecast reference time",
         }
-    if stats:
-        tiles = with_tile_stats(tiles, meta)
     return tiles, meta

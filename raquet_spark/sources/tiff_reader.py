@@ -13,17 +13,15 @@ Three layers:
    source-grid pixel rows. The file must be on storage all executors
    can reach (shared FS / object store), the same contract GDAL's
    windowed reads have on a cluster.
-3. ``geotiff_to_raquet`` — Spark-first warp to the web-mercator tile
-   grid: each SOURCE pixel is forward-mapped to the target pixel grid
-   (closed-form EPSG:4326/3857 math as Column expressions), then one
-   ``groupBy(target pixel)`` keeps the source sample nearest to the
-   target pixel center (deterministic tiebreak) — GDAL's
-   nearest-neighbor warp as a single relational shuffle. The target
-   zoom is chosen so the mercator resolution at the raster's center
-   latitude is at least as fine as the source (every target pixel gets
-   ≥1 source sample, so forward mapping leaves no holes), matching the
-   reference's zoom autoselect intent (raster2raquet.py find_zoom).
-   The result feeds ``operators/tiling.from_pixel_table`` → RaQuet.
+3. ``import_tiles`` — the import planner shared with the NetCDF and
+   GRIB2 importers (``geotiff_to_raquet`` adds only the colour
+   interpretation): GDAL-semantics warp to the web-mercator tile grid
+   at a zoom whose mercator resolution at the raster's center is at
+   least as fine as the source (the reference's find_zoom intent). It
+   picks the strategy — a join-free fused gather for north-up
+   4326/3857 sources, else a target-driven warp join (broadcast or
+   shuffled hash) into ``operators/tiling.from_pixel_table``, or the
+   forward-map aggregation kernels — per the table in its docstring.
 
 Supported: classic AND BigTIFF, little- ("II") and big-endian ("MM"),
 strip or tile layout, compression none/LZW/deflate/PackBits
@@ -40,6 +38,7 @@ from __future__ import annotations
 import math
 import struct
 import zlib
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -1424,7 +1423,13 @@ def _forward_steps(info: dict) -> tuple[list[tuple[str, str]], str, str]:
     raise NotImplementedError(f"forward projection for {proj['type']!r}")
 
 
-_AGG_KERNELS = ("average", "mode", "max", "min", "med", "q1", "q3")
+AGG_KERNELS = ("average", "mode", "max", "min", "med", "q1", "q3")
+
+
+def _sql_double(v: float) -> str:
+    """``v`` as a SQL DOUBLE; NaN/±inf go through the string cast
+    (a bare ``nan`` would parse as a column name)."""
+    return f"CAST({v} AS DOUBLE)" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
 
 
 def aggregate_warp(
@@ -1446,7 +1451,7 @@ def aggregate_warp(
     ``q3`` are exact interpolated percentiles — deterministic where
     GDAL leaves ties unspecified. ``mode`` costs one extra shuffle per
     band (count-then-argmax); the other kernels are single-shuffle."""
-    if resampling not in _AGG_KERNELS:
+    if resampling not in AGG_KERNELS:
         raise ValueError(f"unknown aggregate kernel {resampling!r}")
     world = float((1 << z) * block_size)
     gx = f"CAST(floor((_mx + {_ORIGIN_SHIFT}) / {2.0 * _ORIGIN_SHIFT} * {world}) AS BIGINT)"
@@ -1458,12 +1463,12 @@ def aggregate_warp(
     def valid(b: str) -> str:
         if nodata is None:
             return b
-        return f"CASE WHEN {b} <=> CAST({nodata} AS DOUBLE) THEN NULL ELSE {b} END"
+        return f"CASE WHEN {b} <=> {_sql_double(nodata)} THEN NULL ELSE {b} END"
 
     def finish(expr: str) -> str:
         if nodata is None:
             return expr
-        return f"coalesce({expr}, CAST({nodata} AS DOUBLE))"
+        return f"coalesce({expr}, {_sql_double(nodata)})"
 
     keys = ["gx", "gy", *extra_keys]
     if resampling == "mode":
@@ -1487,7 +1492,7 @@ def aggregate_warp(
             outs = best if outs is None else outs.join(best, keys, "outer")
         if nodata is not None:
             outs = outs.selectExpr(
-                *keys, *[f"coalesce({b}, CAST({nodata} AS DOUBLE)) AS {b}"
+                *keys, *[f"coalesce({b}, {_sql_double(nodata)}) AS {b}"
                          for b in band_cols]
             )
         return outs
@@ -1526,12 +1531,11 @@ def _kernel_sql(d: str, resampling: str) -> str:
 def gather_is_broadcast(info: dict, n_steps: int = 1) -> bool:
     """Whether the warp gather join will broadcast the source (raw
     source bytes × steps ≤ ~100 MB — see the strategy comment inside
-    :func:`_resampled_pixels`). The SINGLE definition shared by the
-    join-strategy decision and the importers' tile-assembly
-    ``aligned`` decision (r17): a broadcast gather is map-only, so
-    with the block-major target grid the ``near`` path's pixels reach
-    ``from_pixel_table`` tile-contiguous and the assembly can skip
-    its exchange."""
+    :func:`_resampled_pixels`). The SINGLE size rule behind the fused
+    gate, the join hint and :func:`import_tiles`' ``aligned`` choice
+    (r17): a broadcast gather is map-only, so with the block-major
+    target grid the ``near`` path's pixels reach ``from_pixel_table``
+    tile-contiguous and the assembly can skip its exchange."""
     return (
         info["width"] * info["height"] * info["n_bands"]
         * np.dtype(info["dtype"]).itemsize * max(1, int(n_steps))
@@ -1544,7 +1548,7 @@ def _merc_fs_exprs(info: dict, z: int, block_size: int) -> tuple[str, str]:
     inverse map from target pixel center to fractional source sample
     coordinates. The SINGLE definition shared by the join-path warp
     (:func:`_resampled_pixels`) and the fused separable index job
-    (:func:`_separable_src_index`), so both evaluate byte-identical
+    (:func:`_separable_src_fs`), so both evaluate byte-identical
     expressions in the same engine (r18)."""
     ox, a, b, oy, c, d = info["transform"]
     det = a * d - b * c
@@ -1664,25 +1668,6 @@ def _separable_src_fs(
     return fsx, fsy
 
 
-def _separable_src_index(
-    spark: SparkSession,
-    info: dict,
-    z: int,
-    block_size: int,
-    tile_ext: tuple[int, int, int, int],
-):
-    """(sxn_by_gx, syn_by_gy) int64 vectors over the target extent —
-    ``floor`` of the JVM-computed fractional coordinates
-    (:func:`_separable_src_fs`); ``floor`` of a double is exact in
-    both engines, so these are the same containing-cell indices the
-    join path's ``CAST(floor(fsx) AS BIGINT)`` produces."""
-    fsx, fsy = _separable_src_fs(spark, info, z, block_size, tile_ext)
-    return (
-        np.floor(fsx).astype("int64"),
-        np.floor(fsy).astype("int64"),
-    )
-
-
 def _kernel_np(d: np.ndarray, resampling: str) -> np.ndarray:
     """Separable resampling kernel weight — the numpy twin of
     :func:`_kernel_sql`, op-for-op (same literals, same left-assoc
@@ -1768,13 +1753,14 @@ def _fused_gather_tiles(
     JVM-computed ``fs`` doubles, so bit-identical to the join path's
     SQL). Each tile blends its 2×2/4×4 gathered planes with the SAME
     accumulation semantics as the SQL ``SUM(CASE WHEN valid …)``:
-    contributions in the join path's (kx, ky) explode order,
-    nodata/out-of-bounds terms SKIPPED (not added as zero — the
-    running sum's bits, including signed zeros, match exactly),
-    ``num/den`` guarded by ``den <> 0``, and Spark's HALF_UP
-    ``round()`` replicated by :func:`_round_half_up_spark` for integer
-    bands — pinned by the bilinear/cubic cases of
-    test_fused_gather.py."""
+    contributions in the join path's (kx, ky) explode order, added to
+    zero-initialised sums (Spark's SUM is ``coalesce(sum, 0) + x``, so
+    a lone ``-0.0`` term sums to ``+0.0``), nodata/out-of-bounds terms
+    skipped, ``num/den`` guarded by ``den <> 0`` (a pixel with no valid
+    term keeps ``den == 0`` and the fill, like the SQL NULL), and
+    Spark's HALF_UP ``round()`` replicated by
+    :func:`_round_half_up_spark` for integer bands — pinned by the
+    bilinear/cubic cases of test_fused_gather.py."""
     from raquet_spark.core.metadata import parse_nodata
     from raquet_spark.functions import quadbin as qb
     from raquet_spark.functions.bands import DTYPES, encode_block
@@ -1788,9 +1774,9 @@ def _fused_gather_tiles(
         (b["name"], b["type"], parse_nodata(b.get("nodata")))
         for b in metadata["bands"]
     ]
+    fsx, fsy = _separable_src_fs(spark, info, z, bs, tile_ext)
     kernel = resampling in ("bilinear", "cubic")
     if kernel:
-        fsx, fsy = _separable_src_fs(spark, info, z, bs, tile_ext)
         klo, khi = (0, 1) if resampling == "bilinear" else (-1, 2)
         # per-axis neighbor indices + kernel weights, precomputed for
         # the whole extent exactly as the join path's SQL evaluates
@@ -1808,8 +1794,10 @@ def _fused_gather_tiles(
         int_out = np.dtype(info["dtype"]).kind in "iu"
         sxn = syn = None
     else:
+        # floor of a double is exact in both engines: the same
+        # containing-cell indices as the join path's floor(fsx)
         kern, int_out = None, False
-        sxn, syn = _separable_src_index(spark, info, z, bs, tile_ext)
+        sxn, syn = np.floor(fsx).astype("int64"), np.floor(fsy).astype("int64")
 
     # `px` may arrive pre-collected (a driver-local decode, e.g. the
     # classic-NetCDF fast path) — this function's next step is the
@@ -1867,6 +1855,70 @@ def _fused_gather_tiles(
         f", {extra_key} double" if extra_key is not None else ""
     ) + "".join(f", {name} binary" for name, _, _ in bands)
 
+    def gather(x0, y0, si, sxn_b, syn_b, grids_b):
+        # containing-cell copy, verbatim; the join path emits no row for
+        # a tile with zero in-bounds pixels
+        cols = sxn_b[x0:x0 + bs]
+        rows_ = syn_b[y0:y0 + bs]
+        okc = (cols >= 0) & (cols < w)
+        okr = (rows_ >= 0) & (rows_ < h)
+        covered = bool(okr.any() and okc.any())
+        tiles = {}
+        for name, btype, nodata in bands:
+            tile = np.full((bs, bs), 0 if nodata is None else nodata,
+                           dtype=DTYPES[btype])
+            if covered:
+                tile[np.ix_(okr, okc)] = grids_b[name][si][rows_[okr]][:, cols[okc]]
+            tiles[name] = tile
+        return tiles, covered
+
+    def blend(x0, y0, si, kern_b, grids_b):
+        # the numpy twin of the join path's SUM(CASE WHEN valid THEN
+        # w*v)/SUM(w): contributions in the (kx, ky) explode order,
+        # invalid terms skipped; the join path emits a (tile, step) row
+        # only when at least one pixel blended non-NULL
+        sxk_b, syk_b, wxk_b, wyk_b = kern_b
+        cxs = [s[x0:x0 + bs] for s in sxk_b]
+        rys = [s[y0:y0 + bs] for s in syk_b]
+        wxs = [v[x0:x0 + bs] for v in wxk_b]
+        wys = [v[y0:y0 + bs] for v in wyk_b]
+        okx = [(s >= 0) & (s < w) for s in cxs]
+        oky = [(s >= 0) & (s < h) for s in rys]
+        ccx = [np.clip(s, 0, w - 1) for s in cxs]
+        ccy = [np.clip(s, 0, h - 1) for s in rys]
+        tiles, any_valid = {}, False
+        for name, btype, nodata in bands:
+            gband = grids_b[name][si]
+            num = np.zeros((bs, bs))
+            den = np.zeros((bs, bs))
+            for ix in range(len(cxs)):
+                if not okx[ix].any():
+                    continue
+                for iy in range(len(rys)):
+                    m2 = oky[iy][:, None] & okx[ix][None, :]
+                    if not m2.any():
+                        continue
+                    v = gband[ccy[iy][:, None], ccx[ix][None, :]].astype("float64")
+                    if nodata is not None:
+                        if nodata != nodata:  # NaN
+                            m2 = m2 & ~np.isnan(v)
+                        else:
+                            m2 = m2 & (v != float(nodata))
+                    w2 = wys[iy][:, None] * wxs[ix][None, :]
+                    num = np.where(m2, num + w2 * v, num)
+                    den = np.where(m2, den + w2, den)
+            okp = den != 0.0
+            tile = np.full((bs, bs), 0 if nodata is None else nodata,
+                           dtype=DTYPES[btype])
+            if okp.any():
+                any_valid = True
+                out = num[okp] / den[okp]
+                if int_out:
+                    out = _round_half_up_spark(out)
+                tile[okp] = out.astype(DTYPES[btype])
+            tiles[name] = tile
+        return tiles, any_valid
+
     def build(batches):
         sxn_b, syn_b, tvals_b, grids_b, kern_b = bvar.value
         nt = len(tvals_b) if tvals_b is not None else 1
@@ -1881,104 +1933,21 @@ def _fused_gather_tiles(
                 ty = ty0 + tid // ntx
                 x0 = (tx - tx0) * bs
                 y0 = (ty - ty0) * bs
-                if kern_b is not None:
-                    # kernel blend branch — the numpy twin of the join
-                    # path's SUM(CASE WHEN valid THEN w*v)/SUM(w) with
-                    # contributions in the (kx, ky) explode order and
-                    # invalid terms SKIPPED, never added as zero
-                    sxk_b, syk_b, wxk_b, wyk_b = kern_b
-                    cxs = [s[x0:x0 + bs] for s in sxk_b]
-                    rys = [s[y0:y0 + bs] for s in syk_b]
-                    wxs = [v[x0:x0 + bs] for v in wxk_b]
-                    wys = [v[y0:y0 + bs] for v in wyk_b]
-                    okx = [(s >= 0) & (s < w) for s in cxs]
-                    oky = [(s >= 0) & (s < h) for s in rys]
-                    ccx = [np.clip(s, 0, w - 1) for s in cxs]
-                    ccy = [np.clip(s, 0, h - 1) for s in rys]
-                    block = qb.py_tile_to_cell(tx, ty, z)
-                    for si in range(nt):
-                        blobs: dict[str, bytes] = {}
-                        any_valid = False
-                        for name, btype, nodata in bands:
-                            fill = 0 if nodata is None else nodata
-                            gband = grids_b[name][si]
-                            num = np.zeros((bs, bs))
-                            den = np.zeros((bs, bs))
-                            started = np.zeros((bs, bs), dtype=bool)
-                            for ix in range(len(cxs)):
-                                if not okx[ix].any():
-                                    continue
-                                for iy in range(len(rys)):
-                                    m2 = oky[iy][:, None] & okx[ix][None, :]
-                                    if not m2.any():
-                                        continue
-                                    v = gband[
-                                        ccy[iy][:, None], ccx[ix][None, :]
-                                    ].astype("float64")
-                                    if nodata is not None:
-                                        if nodata != nodata:  # NaN
-                                            m2 = m2 & ~np.isnan(v)
-                                        else:
-                                            m2 = m2 & (v != float(nodata))
-                                    w2 = wys[iy][:, None] * wxs[ix][None, :]
-                                    t = w2 * v
-                                    num = np.where(
-                                        m2,
-                                        np.where(started, num + t, t),
-                                        num,
-                                    )
-                                    den = np.where(
-                                        m2,
-                                        np.where(started, den + w2, w2),
-                                        den,
-                                    )
-                                    started |= m2
-                            okp = started & (den != 0.0)
-                            tile = np.full((bs, bs), fill, dtype=DTYPES[btype])
-                            if okp.any():
-                                any_valid = True
-                                blend = num[okp] / den[okp]
-                                if int_out:
-                                    blend = _round_half_up_spark(blend)
-                                tile[okp] = blend.astype(DTYPES[btype])
-                            blobs[name] = encode_block(
-                                tile.reshape(-1), btype, compression
-                            )
-                        # the join path emits a (tile, step) row only
-                        # when at least one pixel blended non-NULL;
-                        # dense callers get the all-fill tile (the
-                        # anti-join literal's byte-identical twin)
-                        if any_valid or dense:
-                            out["block"].append(block)
-                            if extra_key is not None:
-                                out[extra_key].append(float(tvals_b[si]))
-                            for name, _, _ in bands:
-                                out[name].append(blobs[name])
-                    continue
-                cols = sxn_b[x0:x0 + bs]
-                rows_ = syn_b[y0:y0 + bs]
-                okc = (cols >= 0) & (cols < w)
-                okr = (rows_ >= 0) & (rows_ < h)
-                covered = bool(okr.any() and okc.any())
-                if not covered and not dense:
-                    # the join path emits no row for a tile with zero
-                    # in-bounds pixels; dense callers fill it below
-                    continue
-                block = qb.py_tile_to_cell(tx, ty, z)
-                sel = np.ix_(okr, okc) if covered else None
                 for si in range(nt):
-                    out["block"].append(block)
+                    if kern_b is not None:
+                        tiles, valid = blend(x0, y0, si, kern_b, grids_b)
+                    else:
+                        tiles, valid = gather(x0, y0, si, sxn_b, syn_b, grids_b)
+                    # dense callers get the all-fill tile (the anti-join
+                    # literal's byte-identical twin)
+                    if not (valid or dense):
+                        continue
+                    out["block"].append(qb.py_tile_to_cell(tx, ty, z))
                     if extra_key is not None:
                         out[extra_key].append(float(tvals_b[si]))
-                    for name, btype, nodata in bands:
-                        fill = 0 if nodata is None else nodata
-                        tile = np.full((bs, bs), fill, dtype=DTYPES[btype])
-                        if covered:
-                            tile[sel] = (
-                                grids_b[name][si][rows_[okr]][:, cols[okc]]
-                            )
+                    for name, btype, _ in bands:
                         out[name].append(
-                            encode_block(tile.reshape(-1), btype, compression)
+                            encode_block(tiles[name].reshape(-1), btype, compression)
                         )
             yield pd.DataFrame(out)
 
@@ -2332,7 +2301,13 @@ def _resampled_pixels(
     aggs = []
     int_out = np.dtype(info["dtype"]).kind in "iu"
     for bcol in band_cols:
-        valid = "TRUE" if nodata is None else f"NOT ({bcol} <=> CAST({nodata} AS DOUBLE))"
+        if nodata is None:
+            valid = "TRUE"
+        elif nodata != nodata:
+            # NaN samples reach the join as NULL (the decode's Arrow hop)
+            valid = f"{bcol} IS NOT NULL AND NOT isnan({bcol})"
+        else:
+            valid = f"NOT ({bcol} <=> {_sql_double(nodata)})"
         num = f"SUM(CASE WHEN {valid} THEN w * {bcol} END)"
         den = f"SUM(CASE WHEN {valid} THEN w END)"
         blend = f"CASE WHEN {den} <> 0.0D THEN {num} / {den} END"
@@ -2359,6 +2334,188 @@ def _resampled_pixels(
     return blended
 
 
+
+
+def import_tiles(
+    spark: SparkSession,
+    info: dict,
+    bands: list[BandMeta],
+    decode: Callable[[bool], DataFrame | pd.DataFrame],
+    *,
+    driver_decode: bool,
+    zoom: int | None,
+    block_size: int,
+    compression: str | None,
+    stats: bool,
+    resampling: str,
+    zoom_strategy: str = "upper",
+    dense: bool = False,
+    time_key: str | None = None,
+    n_steps: int = 1,
+    cf_time=None,
+) -> tuple[DataFrame, dict]:
+    """The import planner: the one place a parsed raster source becomes
+    (tiles, metadata) on the web-mercator RaQuet grid — raster2raquet's
+    warp-then-tile pipeline, shared by the GeoTIFF, NetCDF and GRIB2
+    importers. They pass only what differs by format:
+
+    - ``info``: the source grid (width/height/transform/epsg/dtype/
+      nodata; GRIB grids add lat_centers/stagger_x/row_ni);
+    - ``bands``: the band metadata;
+    - ``decode(local)``: the (sx, sy[, time key], band_*) source pixel
+      table — a pandas frame decoded on the driver when ``local``,
+      else a distributed DataFrame; ``driver_decode`` says whether the
+      source allows the driver decode (raw byte ranges: uncompressed
+      chunky TIFF, classic NetCDF);
+    - ``time_key``: the extra tile key of multi-step sources
+      (``time_cf``); ``n_steps``: how many full grids the pixel table
+      holds; ``cf_time``: CF units deriving the ``time_ts`` column.
+
+    The target zoom defaults to :func:`_pick_zoom` and the extent to
+    the covering tiles (:func:`_tile_aligned_bounds`). Each strategy
+    choice is made here, once:
+
+    ============================  ===============================  ====
+    input class                   branch                           exch
+    ============================  ===============================  ====
+    north-up 4326/3857 grid       fused separable gather           0
+    (Gaussian rows too),          (:func:`_fused_gather_tiles`);
+    near/bilinear/cubic, raw      decode on the driver when
+    bytes × steps ≤ 100 MB        ``driver_decode``, else
+    (:func:`gather_is_broadcast`) distributed and collected
+    other near ≤ 100 MB           broadcast warp join, aligned     0
+    (projected, rotated,          map-only tile assembly
+    staggered, ragged rows)
+    other bilinear/cubic          broadcast warp join, blend       2
+    ≤ 100 MB                      groupBy, grouped assembly
+    near > 100 MB                 shuffled-hash warp join,         3
+                                  grouped assembly
+    bilinear/cubic > 100 MB       shuffled-hash warp join, blend   4
+                                  groupBy, grouped assembly
+    average/mode/max/min/med/     forward-map aggregate groupBy    2
+    q1/q3                         (:func:`aggregate_warp`),
+                                  grouped assembly
+    ============================  ===============================  ====
+
+    "exch" counts the hash shuffles of the tiles' plan (multi-task
+    decode, ``dense`` and stats off); ``mode`` adds one per band. On the
+    join branches ``dense`` adds an anti-join that fills every uncovered
+    tile of the extent with one nodata blob (the fused gather emits
+    those tiles itself). Then ``time_ts`` (``cf_time``) and the
+    per-tile stats (``stats``)."""
+    z = zoom if zoom is not None else _pick_zoom(info, block_size, zoom_strategy)
+    # bounds = covering-tile extent at the target zoom (tile-aligned,
+    # like the reference's union of mercantile tile bounds); the corner
+    # min/max handles bottom-up files (positive y step, e.g. n37_w123's
+    # ModelTransformation) and rotated projected corners (AEA)
+    bounds, tile_ext = _tile_aligned_bounds(_lonlat_corners(info), z)
+    tx0, ty0, tx1, ty1 = tile_ext
+    meta = build_metadata(
+        bands=bands,
+        bounds=bounds,
+        # tile-aligned output raster dims, like the reference metadata
+        width=(tx1 - tx0 + 1) * block_size,
+        height=(ty1 - ty0 + 1) * block_size,
+        block_width=block_size,
+        block_height=block_size,
+        min_zoom=z,
+        max_zoom=z,
+        compression=compression,
+        tile_statistics=stats,
+    )
+    extra = (time_key,) if time_key else ()
+    if _fused_gather_eligible(info, resampling, n_steps):
+        tiles = _fused_gather_tiles(
+            spark, decode(driver_decode), info, z, block_size, tile_ext,
+            meta, compression, extra_key=time_key, dense=dense,
+            resampling=resampling,
+        )
+    else:
+        from raquet_spark.operators.tiling import from_pixel_table
+
+        px = decode(False)
+        band_cols = [b.name for b in bands]
+        if resampling in AGG_KERNELS:
+            # forward map: every source sample's mercator center
+            if info["epsg"] == 3857:
+                ox, sxr, rxr, oy, ryr, syr = info["transform"]
+                px = px.withColumn(
+                    "_mx", F.expr(f"{ox} + (sx + 0.5) * {sxr} + (sy + 0.5) * {rxr}")
+                ).withColumn(
+                    "_my", F.expr(f"{oy} + (sx + 0.5) * {ryr} + (sy + 0.5) * {syr}")
+                )
+            else:
+                steps, lon_e, lat_e = _lonlat_steps(info)
+                for name, expr in steps:
+                    px = px.withColumn(name, F.expr(expr))
+                px = (
+                    px.withColumn("_lon", F.expr(lon_e))
+                    .withColumn("_lat", F.expr(lat_e))
+                    .withColumn("_mx", F.expr(f"_lon * {math.pi / 180.0 * _EARTH_R}"))
+                    .withColumn(
+                        "_my",
+                        F.expr(
+                            f"{_EARTH_R} * ln(tan({math.pi / 4.0} + radians(_lat) / 2.0))"
+                        ),
+                    )
+                )
+            pixels = aggregate_warp(
+                px, z, block_size, band_cols, resampling, info["nodata"],
+                extra_keys=extra,
+            )
+        else:
+            # target-driven inverse mapping: GDAL's warp semantics —
+            # every covered target pixel gets a value; an unknown
+            # kernel fails here, after the grid's own gates
+            pixels = _resampled_pixels(
+                spark, px, info, z, block_size, resampling, tile_ext,
+                extra_cols=extra, n_steps=n_steps,
+            )
+        tiles = from_pixel_table(
+            pixels, meta, compression=compression,
+            extra_keys=tuple((k, "double") for k in extra),
+            # map-only assembly (r17): a broadcast near gather over the
+            # block-major target grid delivers tile-contiguous pixels
+            aligned=resampling == "near" and gather_is_broadcast(info, n_steps),
+        )
+        if dense:
+            # the reference warps the full covering grid, so all-nodata
+            # tiles exist too (e.g. the corners of a rotated Albers
+            # footprint's bounding box). One nodata blob is encoded once
+            # on the driver and attached as a literal to the anti-joined
+            # missing cells — no per-tile encode work.
+            from raquet_spark.functions import quadbin as qbf
+            from raquet_spark.functions.bands import DTYPES, encode_block
+
+            cell = qbf.tile_to_cell_sql("x", "y", z, "spark")
+            full = spark.sql(
+                f"""
+                SELECT {cell} AS block
+                FROM (SELECT explode(sequence({tx0}, {tx1})) AS x)
+                CROSS JOIN (SELECT explode(sequence({ty0}, {ty1})) AS y)
+                """
+            )
+            missing = full.join(tiles.select("block"), "block", "left_anti")
+            fill_cols = []
+            for b in bands:
+                fill = b.nodata if b.nodata is not None else 0
+                blob = encode_block(
+                    np.full(block_size * block_size, fill, dtype=DTYPES[b.type]),
+                    b.type, compression,
+                )
+                fill_cols.append(F.lit(bytearray(blob)).alias(b.name))
+            tiles = tiles.unionByName(missing.select("block", *fill_cols))
+    if cf_time is not None:
+        from raquet_spark.operators.time_dim import with_time_ts
+
+        tiles = with_time_ts(tiles, cf_time)
+    if stats:
+        from raquet_spark.operators.tile_stats import with_tile_stats
+
+        tiles = with_tile_stats(tiles, meta)
+    return tiles, meta
+
+
 def geotiff_to_raquet(
     spark: SparkSession,
     path: str,
@@ -2371,114 +2528,11 @@ def geotiff_to_raquet(
     resampling: str = "near",
 ) -> tuple[DataFrame, dict]:
     """Read a real GeoTIFF and produce (tiles, metadata) on the
-    web-mercator RaQuet grid — raster2raquet's convert path, one
-    relational plan: distributed segment decode → forward-map warp
-    (one shuffle keyed by target pixel) → tile assembly (one shuffle
-    keyed by block) → optional per-tile stats."""
+    web-mercator RaQuet grid — raster2raquet's convert path. The IFD
+    parse and GDAL-style colour interpretation are GeoTIFF's own; the
+    warp strategy, tile assembly and stats are :func:`import_tiles`'s
+    (see its strategy table)."""
     info = read_tiff_structure(path)
-    z = zoom if zoom is not None else _pick_zoom(info, block_size, zoom_strategy)
-    px = tiff_pixel_table(spark, info)
-
-    # bounds = covering-tile extent at the target zoom (tile-aligned,
-    # like the reference's union of mercantile tile bounds); the corner
-    # min/max handles bottom-up files (positive y step, e.g. n37_w123's
-    # ModelTransformation) and rotated projected corners (AEA)
-    (w, s, e, n), (tx0, ty0, tx1, ty1) = _tile_aligned_bounds(
-        _lonlat_corners(info), z
-    )
-
-    if resampling in ("near", "bilinear", "cubic"):
-        if _fused_gather_eligible(info, resampling):
-            # join-free separable gather (r18): broadcast the decoded
-            # grid + two index vectors, build tiles in one map-only
-            # pass over tile ids — no per-target-pixel rows at all
-            # (see _fused_gather_tiles). Uncompressed chunky sources
-            # decode on the driver (raw byte ranges — the fused path
-            # collects them there anyway); compressed/planar keep the
-            # distributed decode.
-            if info["compression"] == 1 and not (
-                info.get("planar", 1) == 2 and info["n_bands"] > 1
-            ):
-                px = tiff_pixel_table(spark, info, local=True)
-            return _assemble_tiles(
-                spark, None, info, z, block_size, compression, stats,
-                dense, (w, s, e, n), (tx0, ty0, tx1, ty1), fused_src=px,
-                resampling=resampling,
-            )
-        # target-driven inverse mapping: GDAL's warp semantics — every
-        # covered target pixel gets a value (dense even when the target
-        # out-resolves the source). Projected CRS go through the Snyder
-        # FORWARD projections (_forward_steps); geographic/mercator are
-        # direct closed forms.
-        pixels = _resampled_pixels(
-            spark, px, info, z, block_size, resampling, (tx0, ty0, tx1, ty1)
-        )
-        return _assemble_tiles(
-            spark, pixels, info, z, block_size, compression, stats, dense,
-            (w, s, e, n), (tx0, ty0, tx1, ty1),
-            # map-only assembly (r17): broadcast near gather over the
-            # block-major target grid → tile-contiguous pixels, no
-            # tiling exchange (see from_pixel_table)
-            aligned=(resampling == "near" and gather_is_broadcast(info)),
-        )
-    if resampling not in _AGG_KERNELS:
-        raise ValueError(f"unknown resampling {resampling!r}")
-
-    if info["epsg"] == 3857:
-        ox, sxr, rxr, oy, ryr, syr = info["transform"]
-        px = px.withColumn(
-            "_mx", F.expr(f"{ox} + (sx + 0.5) * {sxr} + (sy + 0.5) * {rxr}")
-        ).withColumn(
-            "_my", F.expr(f"{oy} + (sx + 0.5) * {ryr} + (sy + 0.5) * {syr}")
-        )
-    else:
-        steps, lon_e, lat_e = _lonlat_steps(info)
-        for name, expr in steps:
-            px = px.withColumn(name, F.expr(expr))
-        px = (
-            px.withColumn("_lon", F.expr(lon_e))
-            .withColumn("_lat", F.expr(lat_e))
-            .withColumn("_mx", F.expr(f"_lon * {math.pi / 180.0 * _EARTH_R}"))
-            .withColumn(
-                "_my",
-                F.expr(
-                    f"{_EARTH_R} * ln(tan({math.pi / 4.0} + radians(_lat) / 2.0))"
-                ),
-            )
-        )
-    band_cols = [f"band_{b + 1}" for b in range(info["n_bands"])]
-    pixels = aggregate_warp(
-        px, z, block_size, band_cols, resampling, info["nodata"]
-    )
-    return _assemble_tiles(
-        spark, pixels, info, z, block_size, compression, stats, dense,
-        (w, s, e, n), (tx0, ty0, tx1, ty1),
-    )
-
-
-def _assemble_tiles(
-    spark: SparkSession,
-    pixels: DataFrame | None,
-    info: dict,
-    z: int,
-    block_size: int,
-    compression: str | None,
-    stats: bool,
-    dense: bool,
-    bounds: tuple[float, float, float, float],
-    tile_ext: tuple[int, int, int, int],
-    aligned: bool = False,
-    fused_src: DataFrame | None = None,
-    resampling: str = "near",
-) -> tuple[DataFrame, dict]:
-    """Warped (gx, gy, band_*) pixels → (tiles, metadata): shared tail
-    of the nearest and bilinear/cubic import paths. With ``fused_src``
-    (the SOURCE pixel table, r18) the separable join-free gather builds
-    the tiles directly — including the dense nodata fill, so the
-    anti-join below is skipped too."""
-    w, s, e, n = bounds
-    tx0, ty0, tx1, ty1 = tile_ext
-
     # GDAL-style color interpretation, as the reference records it:
     # palette > gray (single band) > RGB(A)
     n_bands = info["n_bands"]
@@ -2502,65 +2556,13 @@ def _assemble_tiles(
         )
         for b in range(n_bands)
     ]
-    meta = build_metadata(
-        bands=bands,
-        bounds=(w, s, e, n),
-        # tile-aligned output raster dims, like the reference metadata
-        width=(tx1 - tx0 + 1) * block_size,
-        height=(ty1 - ty0 + 1) * block_size,
-        block_width=block_size,
-        block_height=block_size,
-        min_zoom=z,
-        max_zoom=z,
-        compression=compression,
-        tile_statistics=stats,
+    return import_tiles(
+        spark, info, bands,
+        lambda local: tiff_pixel_table(spark, info, local=local),
+        # uncompressed chunky segments are raw byte ranges
+        driver_decode=info["compression"] == 1
+        and not (info.get("planar", 1) == 2 and n_bands > 1),
+        zoom=zoom, block_size=block_size, compression=compression,
+        stats=stats, resampling=resampling, zoom_strategy=zoom_strategy,
+        dense=dense,
     )
-    from raquet_spark.operators.tiling import from_pixel_table
-
-    if fused_src is not None:
-        tiles = _fused_gather_tiles(
-            spark, fused_src, info, z, block_size, tile_ext, meta,
-            compression, dense=dense, resampling=resampling,
-        )
-        if stats:
-            from raquet_spark.operators.tile_stats import with_tile_stats
-
-            tiles = with_tile_stats(tiles, meta)
-        return tiles, meta
-    tiles = from_pixel_table(
-        pixels, meta, compression=compression, aligned=aligned
-    )
-    if dense:
-        # the reference warps the full covering grid, so all-nodata
-        # tiles exist too (e.g. the corners of a rotated Albers
-        # footprint's bounding box). One nodata blob is encoded once on
-        # the driver and attached as a literal to the anti-joined
-        # missing cells — no per-tile encode work. Pass dense=False for
-        # sparse output on mostly-empty extents at scale.
-
-        from raquet_spark.functions import quadbin as qbf
-        from raquet_spark.functions.bands import DTYPES, encode_block
-
-        cell = qbf.tile_to_cell_sql("x", "y", z, "spark")
-        full = spark.sql(
-            f"""
-            SELECT {cell} AS block
-            FROM (SELECT explode(sequence({tx0}, {tx1})) AS x)
-            CROSS JOIN (SELECT explode(sequence({ty0}, {ty1})) AS y)
-            """
-        )
-        missing = full.join(tiles.select("block"), "block", "left_anti")
-        fill_cols = []
-        for b in bands:
-            dt = np.dtype(DTYPES[b.type])
-            fill = b.nodata if b.nodata is not None else 0
-            blob = encode_block(
-                np.full(block_size * block_size, fill, dtype=dt), b.type, compression
-            )
-            fill_cols.append(F.lit(bytearray(blob)).alias(b.name))
-        tiles = tiles.unionByName(missing.select("block", *fill_cols))
-    if stats:
-        from raquet_spark.operators.tile_stats import with_tile_stats
-
-        tiles = with_tile_stats(tiles, meta)
-    return tiles, meta

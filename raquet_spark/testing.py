@@ -292,3 +292,71 @@ def write_netcdf_classic(
         else:
             f.write(raw.tobytes())
     return path
+
+
+def write_geokey_tiff(
+    path: str,
+    width: int,
+    height: int,
+    origin: tuple[float, float],
+    res: float,
+    geokeys: list[tuple[int, int, int, int]],
+    doubles: tuple = (),
+    dtype: str = "<u2",
+    nodata: float | None = None,
+    values: np.ndarray | None = None,
+    rows_per_strip: int | None = None,
+) -> np.ndarray:
+    """Write a minimal uncompressed little-endian GeoTIFF of one band —
+    the fixture builder for the GeoTIFF importer's CRS and warp paths.
+    ``origin`` is the model coordinate of the top-left corner, ``res``
+    the square pixel size, ``geokeys`` the GeoKey directory rows (the
+    header row is added) with ``doubles`` as its GeoDoubleParams.
+    ``values`` (height × width) default to a ramp modulo 777;
+    ``nodata`` is written as GDAL_NODATA; ``rows_per_strip`` defaults
+    to one strip. Returns the stored array."""
+    import struct
+
+    from raquet_spark.sources.geotiff import _pack_ifd
+
+    dt = np.dtype(dtype).newbyteorder("<")
+    if values is None:
+        values = np.arange(width * height, dtype=dt) % 777
+    vals = np.asarray(values).astype(dt).reshape(height, width)
+    data = vals.tobytes()
+    rps = rows_per_strip or height
+    row_bytes = width * dt.itemsize
+    offs = list(range(8, 8 + len(data), rps * row_bytes))
+    counts = [min(rps * row_bytes, 8 + len(data) - o) for o in offs]
+    gk_rows = [(1, 1, 0, len(geokeys))] + list(geokeys)
+    gk = b"".join(struct.pack("<H", v) for row in gk_rows for v in row)
+    entries = [
+        (256, 4, 1, width),
+        (257, 4, 1, height),
+        (258, 3, 1, dt.itemsize * 8),
+        (259, 3, 1, 1),
+        (262, 3, 1, 1),
+        (273, 4, len(offs), struct.pack(f"<{len(offs)}I", *offs)),
+        (277, 3, 1, 1),
+        (278, 4, 1, rps),
+        (279, 4, len(offs), struct.pack(f"<{len(offs)}I", *counts)),
+        (339, 3, 1, {"u": 1, "i": 2, "f": 3}[dt.kind]),
+        (33550, 12, 3, struct.pack("<3d", res, res, 0.0)),
+        (33922, 12, 6, struct.pack("<6d", 0, 0, 0, origin[0], origin[1], 0)),
+        (34735, 3, len(gk) // 2, gk),
+    ]
+    if doubles:
+        entries.append(
+            (34736, 12, len(doubles), struct.pack(f"<{len(doubles)}d", *doubles))
+        )
+    if nodata is not None:
+        nd = f"{nodata}\x00".encode()
+        entries.append((42113, 2, len(nd), nd))
+    ifd_off = 8 + len(data)
+    with open(path, "wb") as f:
+        f.write(b"II*\x00" + struct.pack("<I", ifd_off) + data)
+        f.write(_pack_ifd(entries, ifd_off, 0))
+    return vals
+
+
+GEOKEYS_4326 = [(1024, 0, 1, 2), (1025, 0, 1, 1), (2048, 0, 1, 4326)]

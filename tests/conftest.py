@@ -46,3 +46,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def standin_tifs(tmp_path_factory) -> dict[str, str]:
+    """Generated GeoTIFF stand-ins for the importer's byte-identity and
+    plan gates. ``dem``: int16 EPSG:4326 on a 1-arc-second grid near
+    (-123°, 38°) with GDAL_NODATA -32767 voids — the SRTM-1 tile class
+    (n37_w123) the fused gather serves. ``utm``: uint16 EPSG:32610 at
+    30 m with nodata-0 voids — the projected warp-join class."""
+    import numpy as np
+
+    from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
+
+    def ramp(w, h, lo, modulo, nodata):
+        gy, gx = np.mgrid[0:h, 0:w]
+        vals = lo + (gx * 7 + gy * 11) % modulo
+        vals[h // 5:h // 3, w // 4:w // 2] = nodata
+        vals[h - h // 6:, w - w // 5:] = nodata
+        return vals
+
+    d = tmp_path_factory.mktemp("standin")
+    res = 1.0 / 3600.0
+    paths = {"dem": str(d / "dem.tif"), "utm": str(d / "utm.tif")}
+    write_geokey_tiff(
+        paths["dem"], 401, 333, (-123.0 - res / 2, 38.0 + res / 2), res,
+        GEOKEYS_4326, dtype="<i2", nodata=-32767,
+        values=ramp(401, 333, -300, 1999, -32767), rows_per_strip=16,
+    )
+    write_geokey_tiff(
+        paths["utm"], 97, 83, (550000.0, 4180000.0), 30.0,
+        [(1024, 0, 1, 1), (1025, 0, 1, 1), (3072, 0, 1, 32610)],
+        dtype="<u2", nodata=0, values=ramp(97, 83, 1, 2000, 0),
+        rows_per_strip=16,
+    )
+    return paths

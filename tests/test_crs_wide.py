@@ -8,7 +8,6 @@ unsupported projection FAMILY."""
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 import pytest
@@ -21,53 +20,7 @@ from raquet_spark.sources.tiff_reader import (
     sinu_ell_inverse,
     tiff_pixel_table,
 )
-
-
-def _geo_tiff(path, width, height, origin, res, geokeys, doubles,
-              dtype="<u2"):
-    """Minimal single-strip TIFF with the given GeoKey directory."""
-    vals = (np.arange(width * height, dtype=dtype) % 777).reshape(
-        height, width
-    )
-    data = vals.tobytes()
-    gk_rows = [(1, 1, 0, len(geokeys))] + geokeys
-    gk = b"".join(struct.pack("<H", v) for row in gk_rows for v in row)
-    dbl = struct.pack(f"<{len(doubles)}d", *doubles)
-    scale = struct.pack("<3d", res, res, 0.0)
-    tie = struct.pack("<6d", 0, 0, 0, origin[0], origin[1], 0)
-    entries = [
-        (256, 4, 1, struct.pack("<I", width)),
-        (257, 4, 1, struct.pack("<I", height)),
-        (258, 3, 1, struct.pack("<H", 16)),
-        (259, 3, 1, struct.pack("<H", 1)),
-        (262, 3, 1, struct.pack("<H", 1)),
-        (273, 4, 1, struct.pack("<I", 8)),
-        (277, 3, 1, struct.pack("<H", 1)),
-        (278, 4, 1, struct.pack("<I", height)),
-        (279, 4, 1, struct.pack("<I", len(data))),
-        (339, 3, 1, struct.pack("<H", 1)),
-        (33550, 12, 3, scale),
-        (33922, 12, 6, tie),
-        (34735, 3, len(gk) // 2, gk),
-    ]
-    if doubles:
-        entries.append((34736, 12, len(doubles), dbl))
-    entries.sort()
-    ifd_off = 8 + len(data)
-    ext_off = ifd_off + 2 + len(entries) * 12 + 4
-    body, ext = b"", b""
-    for tag, typ, cnt, val in entries:
-        if len(val) <= 4:
-            body += struct.pack("<HHI", tag, typ, cnt) + val.ljust(4, b"\x00")
-        else:
-            body += struct.pack("<HHII", tag, typ, cnt, ext_off + len(ext))
-            ext += val
-    with open(path, "wb") as f:
-        f.write(b"II*\x00" + struct.pack("<I", ifd_off))
-        f.write(data)
-        f.write(struct.pack("<H", len(entries)) + body
-                + struct.pack("<I", 0) + ext)
-    return vals
+from raquet_spark.testing import write_geokey_tiff
 
 
 def test_ps_snyder_worked_example():
@@ -242,7 +195,7 @@ def test_warp_polar_stereo_end_to_end(spark, tmp_path):
         (3095, 34736, 1, 1),       # straight vertical pole lon
         (3082, 34736, 1, 2), (3083, 34736, 1, 3),
     ]
-    vals = _geo_tiff(path, 48, 48, (-200000.0, 1500000.0), 2000.0,
+    vals = write_geokey_tiff(path, 48, 48, (-200000.0, 1500000.0), 2000.0,
                      geokeys, doubles)
     info = read_tiff_structure(path)
     assert info["projection"]["type"] == "ps"
@@ -279,7 +232,7 @@ def test_warp_sinu_ell_end_to_end(spark, tmp_path):
         (3080, 34736, 1, 0),
         (3082, 34736, 1, 1), (3083, 34736, 1, 2),
     ]
-    _geo_tiff(path, 32, 32, (-1000000.0, 4500000.0), 3000.0,
+    write_geokey_tiff(path, 32, 32, (-1000000.0, 4500000.0), 3000.0,
               geokeys, doubles)
     info = read_tiff_structure(path)
     assert info["projection"]["type"] == "sinu_ell"
@@ -291,13 +244,13 @@ def test_geographic_datum_handling(tmp_path):
     """NAD83 (4269) lon/lat is WGS84-compatible and normalizes to the
     4326 path; NAD27 (4267) needs a real datum shift and gates."""
     nad83 = str(tmp_path / "nad83.tif")
-    _geo_tiff(nad83, 16, 16, (-100.0, 40.0), 0.01,
+    write_geokey_tiff(nad83, 16, 16, (-100.0, 40.0), 0.01,
               [(1024, 0, 1, 2), (2048, 0, 1, 4269)], ())
     info = read_tiff_structure(nad83)
     assert info["epsg"] == 4326
 
     nad27 = str(tmp_path / "nad27.tif")
-    _geo_tiff(nad27, 16, 16, (-100.0, 40.0), 0.01,
+    write_geokey_tiff(nad27, 16, 16, (-100.0, 40.0), 0.01,
               [(1024, 0, 1, 2), (2048, 0, 1, 4267)], ())
     with pytest.raises(NotImplementedError, match="datum shift"):
         read_tiff_structure(nad27)
@@ -316,7 +269,7 @@ def test_unsupported_family_named_in_error(tmp_path):
         (3080, 34736, 1, 1), (3081, 34736, 1, 0),
     ]
     with pytest.raises(NotImplementedError, match="Lambert Azimuthal"):
-        _geo_tiff(path, 8, 8, (0.0, 0.0), 1000.0, geokeys, doubles)
+        write_geokey_tiff(path, 8, 8, (0.0, 0.0), 1000.0, geokeys, doubles)
         read_tiff_structure(path)
 
 
@@ -358,7 +311,7 @@ def test_spherical_flattening_zero_is_sphere(tmp_path):
         (3080, 34736, 1, 0), (3081, 34736, 1, 1),
         (3082, 34736, 1, 2), (3083, 34736, 1, 3),
     ]
-    _geo_tiff(path, 16, 16, (-50000.0, 50000.0), 1000.0, geokeys, doubles)
+    write_geokey_tiff(path, 16, 16, (-50000.0, 50000.0), 1000.0, geokeys, doubles)
     info = read_tiff_structure(path)
     assert info["projection"]["inv_f"] == float("inf")
 

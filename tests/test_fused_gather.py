@@ -22,7 +22,10 @@ def _rows(df, sort_cols):
     for rec in pdf.to_dict("records"):
         out.append(
             tuple(
-                bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                bytes(v) if isinstance(v, (bytes, bytearray))
+                # NaN stats of all-nodata tiles must compare equal
+                else "NaN" if isinstance(v, float) and v != v
+                else v
                 for v in rec.values()
             )
         )
@@ -81,13 +84,19 @@ def test_fused_gather_matches_join_path_netcdf(spark, tmp_path, monkeypatch):
     )
 
 
-def test_fused_gather_matches_join_path_n37(spark, monkeypatch):
-    """Real GeoTIFF (int16, EPSG 4326, bottom-up transform) through the
-    dense+stats defaults — the geotiff_import_n37 bench line."""
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_fused_gather_matches_join_path_n37(
+    spark, monkeypatch, standin_tifs, src
+):
+    """int16 EPSG 4326 GeoTIFF with GDAL_NODATA through the dense+stats
+    defaults — the geotiff_import_n37 bench line: a generated stand-in,
+    plus the real SRTM tile (bottom-up transform) when present."""
     import os
 
     n37 = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(n37):
+    if src == "standin":
+        n37 = standin_tifs["dem"]
+    elif not os.path.exists(n37):
         pytest.skip("reference GeoTIFF not present")
     _assert_identical(
         lambda: tr.geotiff_to_raquet(spark, n37, block_size=128),
@@ -146,8 +155,11 @@ def test_fused_gather_matches_join_path_gaussian(spark, tmp_path, monkeypatch):
     )
 
 
-def test_fused_kernel_matches_join_path_n37_bilinear(spark, monkeypatch):
-    """Bilinear on the real int16 GeoTIFF (the geotiff_import_n37_bilinear
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_fused_kernel_matches_join_path_n37_bilinear(
+    spark, monkeypatch, standin_tifs, src
+):
+    """Bilinear on the int16 GeoTIFF (the geotiff_import_n37_bilinear
     bench line): the fused numpy blend must be byte-identical to the
     join path's SQL blend — same JVM fs doubles, same (kx, ky)
     accumulation order with invalid terms skipped, same HALF_UP
@@ -155,7 +167,9 @@ def test_fused_kernel_matches_join_path_n37_bilinear(spark, monkeypatch):
     import os
 
     n37 = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(n37):
+    if src == "standin":
+        n37 = standin_tifs["dem"]
+    elif not os.path.exists(n37):
         pytest.skip("reference GeoTIFF not present")
     _assert_identical(
         lambda: tr.geotiff_to_raquet(
@@ -166,14 +180,19 @@ def test_fused_kernel_matches_join_path_n37_bilinear(spark, monkeypatch):
     )
 
 
-def test_fused_kernel_matches_join_path_n37_cubic(spark, monkeypatch):
-    """Cubic (4×4 neighborhood, negative lobes) on the real int16
-    GeoTIFF — the piecewise kernel polynomial must match _kernel_sql
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_fused_kernel_matches_join_path_n37_cubic(
+    spark, monkeypatch, standin_tifs, src
+):
+    """Cubic (4×4 neighborhood, negative lobes) on the int16 GeoTIFF —
+    the piecewise kernel polynomial must match _kernel_sql
     op-for-op."""
     import os
 
     n37 = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(n37):
+    if src == "standin":
+        n37 = standin_tifs["dem"]
+    elif not os.path.exists(n37):
         pytest.skip("reference GeoTIFF not present")
     _assert_identical(
         lambda: tr.geotiff_to_raquet(
@@ -268,6 +287,35 @@ def test_fused_kernel_matches_join_path_gaussian_bilinear(
     _assert_identical(
         lambda: grib2_to_raquet(spark, path, block_size=64, zoom=3,
                                 resampling="bilinear"),
+        ["block"],
+        monkeypatch,
+    )
+
+
+@pytest.mark.parametrize("resampling", ["bilinear", "cubic"])
+def test_fused_kernel_signed_zero_nan_nodata(
+    spark, tmp_path, monkeypatch, resampling
+):
+    """float32 source of ±0.0 with NaN nodata and an odd width: Spark's
+    SUM is ``coalesce(sum, 0) + x``, so a pixel whose every term is
+    -0.0 (a -0.0 sample, or +0.0 under a negative cubic lobe) blends to
+    +0.0 on the join path — the fused blend must not keep -0.0."""
+    from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
+
+    h, w = 70, 131
+    gy, gx = np.mgrid[0:h, 0:w]
+    vals = np.where((gx // 9 + gy // 7) % 2 == 0, -0.0, 0.0)
+    vals[(gx + gy) % 23 == 0] = np.nan
+    vals[h // 2:, w // 2:] = ((gx * 3 + gy) % 17 - 8)[h // 2:, w // 2:]
+    path = str(tmp_path / "zeros.tif")
+    write_geokey_tiff(
+        path, w, h, (-123.0, 38.0), 0.001, GEOKEYS_4326,
+        dtype="<f4", nodata=float("nan"), values=vals,
+    )
+    _assert_identical(
+        lambda: tr.geotiff_to_raquet(
+            spark, path, block_size=64, resampling=resampling
+        ),
         ["block"],
         monkeypatch,
     )

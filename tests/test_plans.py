@@ -279,8 +279,9 @@ def test_halo_level_single_shuffle(spark):
     assert count_exchanges(parents) == 1
 
 
-def test_geotiff_import_shuffle_budget(spark):
-    """The real-GeoTIFF import (target-driven dense nearest for
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_geotiff_import_shuffle_budget(spark, standin_tifs, src):
+    """The GeoTIFF import (target-driven dense nearest for
     4326/3857 sources) is MAP-ONLY when the source side broadcasts (as
     here): the block-major target grid keeps pixels tile-contiguous
     through the broadcast gather, so the tile assembly runs aligned
@@ -293,7 +294,9 @@ def test_geotiff_import_shuffle_budget(spark):
     import pytest as _pytest
 
     path = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(path):
+    if src == "standin":
+        path = standin_tifs["dem"]
+    elif not os.path.exists(path):
         _pytest.skip("reference raster not available")
     from raquet_spark.plans.inspect import count_exchanges, no_nested_loops
     from raquet_spark.sources.tiff_reader import geotiff_to_raquet
@@ -307,6 +310,8 @@ def test_geotiff_import_shuffle_budget(spark):
     # projected CRS route through the Snyder forward projections into
     # the same target-driven join — same shuffle budget, no BNLJ
     nlcd = "/root/reference/tests/Annual_NLCD_LndCov_2023_CU_C1V0.tif"
+    if src == "standin":
+        nlcd = standin_tifs["utm"]
     tiles2, _ = geotiff_to_raquet(
         spark, nlcd, block_size=256, dense=False, stats=False
     )
@@ -322,7 +327,8 @@ def test_geotiff_import_shuffle_budget(spark):
     assert count_exchanges(tiles3) == 2
 
 
-def test_bilinear_import_fused_exchange_free(spark):
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_bilinear_import_fused_exchange_free(spark, standin_tifs, src):
     """The broadcast-class bilinear import takes the fused separable
     kernel gather (r18 session 4): NO exchange, NO join — one
     MapInPandas over tile ids (the near import's plan shape)."""
@@ -331,7 +337,9 @@ def test_bilinear_import_fused_exchange_free(spark):
     import pytest as _pytest
 
     path = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(path):
+    if src == "standin":
+        path = standin_tifs["dem"]
+    elif not os.path.exists(path):
         _pytest.skip("reference raster not available")
     from raquet_spark.plans.inspect import (
         count_exchanges,
@@ -349,7 +357,10 @@ def test_bilinear_import_fused_exchange_free(spark):
     assert count_exchanges(tiles) == 0
 
 
-def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark, monkeypatch):
+@pytest.mark.parametrize("src", ["standin", "reference"])
+def test_bilinear_import_join_path_three_shuffles_no_bnlj(
+    spark, monkeypatch, standin_tifs, src
+):
     """The JOIN-path resampled import (what non-separable / SHJ-class
     sources still run) is exactly three exchanges — the (sx, sy)
     neighborhood gather join, the blend groupBy(target pixel), and the
@@ -360,7 +371,9 @@ def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark, monkeypatch):
     import pytest as _pytest
 
     path = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if not os.path.exists(path):
+    if src == "standin":
+        path = standin_tifs["dem"]
+    elif not os.path.exists(path):
         _pytest.skip("reference raster not available")
     import raquet_spark.sources.tiff_reader as tr
     from raquet_spark.plans.inspect import (

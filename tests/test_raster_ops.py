@@ -257,14 +257,20 @@ def test_pixel_table_tiling_roundtrip(spark):
     assert got == want
 
 
-def test_aligned_tiling_matches_grouped(spark, tmp_path):
+def test_aligned_tiling_matches_grouped(
+    spark, tmp_path, monkeypatch, standin_tifs
+):
     """The r17 aligned (exchange-free) tile assembly is byte-identical
-    to the grouped path on a time-stepped import — partial edge tiles,
-    interleaved time_cf rows, and the contiguity contract all
-    exercised end to end."""
+    to the grouped path on the imports that take it: a projected
+    GeoTIFF (partial edge tiles, dense fill) and a time-stepped NetCDF
+    held off the fused gather (interleaved time_cf rows, the
+    contiguity contract). A spy asserts the aligned assembly really ran
+    — a 4326 source on the fused gather never reaches
+    ``from_pixel_table``."""
     import numpy as np
 
     import raquet_spark.operators.tiling as tiling_mod
+    import raquet_spark.sources.tiff_reader as tr
     from raquet_spark.sources.netcdf import netcdf_to_raquet
     from raquet_spark.testing import write_netcdf_classic
 
@@ -280,27 +286,36 @@ def test_aligned_tiling_matches_grouped(spark, tmp_path):
         times=np.arange(nt, dtype="f8"), nc_type=3,
         scale_factor=0.5, add_offset=100.0, fill_value=-999,
     )
-    tiles_aligned, _ = netcdf_to_raquet(spark, path, block_size=64, stats=False)
+    monkeypatch.setattr(tr, "_fused_gather_eligible", lambda *a, **k: False)
     orig = tiling_mod.from_pixel_table
+    cases = [
+        (lambda: tr.geotiff_to_raquet(
+            spark, standin_tifs["utm"], block_size=64, stats=False
+        ), ["block"]),
+        (lambda: netcdf_to_raquet(spark, path, block_size=64, stats=False),
+         ["block", "time_cf"]),
+    ]
+    for mk, keys in cases:
+        seen = []
 
-    def grouped(pixels, metadata, compression="gzip", extra_keys=(),
-                aligned=False):
-        return orig(pixels, metadata, compression=compression,
-                    extra_keys=extra_keys, aligned=False)
+        def spy(pixels, metadata, aligned=False, **kw):
+            seen.append(aligned)
+            return orig(pixels, metadata, aligned=aligned, **kw)
 
-    tiling_mod.from_pixel_table = grouped
-    try:
-        tiles_grouped, _ = netcdf_to_raquet(
-            spark, path, block_size=64, stats=False
-        )
-    finally:
-        tiling_mod.from_pixel_table = orig
-    a = {(r["block"], r["time_cf"]): bytes(r["band_1"])
-         for r in tiles_aligned.collect()}
-    b = {(r["block"], r["time_cf"]): bytes(r["band_1"])
-         for r in tiles_grouped.collect()}
-    assert a == b
-    assert len(a) > 0
+        def grouped(pixels, metadata, aligned=False, **kw):
+            return orig(pixels, metadata, aligned=False, **kw)
+
+        monkeypatch.setattr(tiling_mod, "from_pixel_table", spy)
+        tiles_aligned, _ = mk()
+        assert seen == [True]
+        monkeypatch.setattr(tiling_mod, "from_pixel_table", grouped)
+        tiles_grouped, _ = mk()
+        a = {tuple(r[k] for k in keys): bytes(r["band_1"])
+             for r in tiles_aligned.collect()}
+        b = {tuple(r[k] for k in keys): bytes(r["band_1"])
+             for r in tiles_grouped.collect()}
+        assert a == b
+        assert len(a) > 0
 
 
 def test_downsample_kernels_nodata_masked():
@@ -426,6 +441,50 @@ def test_blocked_pyramid_matches_per_level(spark):
            for r in pyr.select("block", "band_1").collect()
            if qb.py_cell_to_tile(r["block"])[2] < 8}
     assert got == want
+
+
+@pytest.mark.parametrize("resampling", ["average", "cubic"])
+def test_pyramid_keeps_time_steps_apart(spark, tmp_path, resampling):
+    """A 3-step NetCDF pyramid builds one overview tile per (cell,
+    step), each keyed by its step's time_cf/time_ts and equal to the
+    pyramid of that step alone — the steps of one cell must not
+    overwrite each other (blocked and halo builders)."""
+    from raquet_spark.sources.netcdf import netcdf_to_raquet
+    from raquet_spark.testing import write_netcdf_classic
+
+    nlat, nlon, nt = 150, 200, 3
+    gy, gx = np.mgrid[0:nlat, 0:nlon]
+    data = np.stack(
+        [((gx * 7 + gy * 11) % 199 - 50 + 100 * t) for t in range(nt)]
+    ).astype("<i2")
+    path = str(tmp_path / "steps.nc")
+    write_netcdf_classic(
+        path, 37.9875 - 0.01 * np.arange(nlat),
+        -123.0 + 0.01 * np.arange(nlon), data,
+        times=np.arange(nt, dtype="f8"), nc_type=3,
+        scale_factor=0.5, add_offset=100.0, fill_value=-999,
+    )
+    tiles, meta = netcdf_to_raquet(spark, path, block_size=64, stats=False)
+    tiles = tiles.localCheckpoint(True)
+    z = meta["tiling"]["max_zoom"]
+    pyr, _ = build_pyramid(tiles, meta, min_zoom=z - 2, resampling=resampling)
+    over = [r for r in pyr.collect() if qb.py_cell_to_tile(r["block"])[2] < z]
+    keys = [(r["block"], r["time_cf"]) for r in over]
+    assert len(keys) == len(set(keys))
+    cells = {b for b, _ in keys}
+    assert set(keys) == {(c, float(t)) for c in cells for t in range(nt)}
+    native_ts = {r["time_cf"]: r["time_ts"] for r in tiles.collect()}
+    assert {r["time_cf"]: r["time_ts"] for r in over} == native_ts
+    for t in range(nt):
+        step = tiles.where(F.col("time_cf") == float(t)).drop("time_cf", "time_ts")
+        want_pyr, _ = build_pyramid(
+            step, meta, min_zoom=z - 2, resampling=resampling
+        )
+        want = {r["block"]: bytes(r["band_1"]) for r in want_pyr.collect()
+                if qb.py_cell_to_tile(r["block"])[2] < z}
+        got = {r["block"]: bytes(r["band_1"]) for r in over
+               if r["time_cf"] == float(t)}
+        assert got == want
 
 
 def test_clip_to_polygon_matches_region_stats(spark):
