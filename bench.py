@@ -381,33 +381,52 @@ def main() -> None:
         timings["netcdf_import_3step"] = round(
             min(dt, timings.get("netcdf_import_3step", dt)), 3)
 
-    # real GeoTIFF ingestion (distributed decode + relational warp),
-    # when the reference rasters are present
+    # real GeoTIFF ingestion: the SRTM-1 reference tile when present,
+    # else a generated stand-in of the same class (3601² int16
+    # EPSG:4326 1″ grid, top-left pixel centred on (-123°, 38°),
+    # GDAL_NODATA -32767 voids, 16-row strips) — the lines always print
     n37 = "/root/reference/tests/n37_w123_1arc_v2.tif"
-    if os.path.exists(n37):
-        from raquet_spark.sources.tiff_reader import geotiff_to_raquet
+    standin = not os.path.exists(n37)
+    if standin:
+        from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
 
-        # 3 iterations: the first import pays one-time JIT/codepath warmup
-        # (~12s cold, ~2.6s second, ~1.8s steady); min-of-2 was reporting
-        # the warmup tail as a regression
-        for _ in range(3):
-            t0 = time.perf_counter()
-            tiles_in, _m = geotiff_to_raquet(spark, n37, block_size=128)
-            tiles_in.count()
-            dt = time.perf_counter() - t0
-            timings["geotiff_import_n37"] = round(
-                min(dt, timings.get("geotiff_import_n37", dt)), 3)
+        n37 = tempfile.mktemp(suffix=".tif")
+        res = 1.0 / 3600.0
+        gy, gx = np.mgrid[0:3601, 0:3601].astype("int32")
+        dem = (gx * 7 + gy * 11) % 1999 - 300
+        dem[600:900, 1200:1800] = -32767
+        dem[3000:, 2900:] = -32767
+        write_geokey_tiff(
+            n37, 3601, 3601, (-123.0 - res / 2, 38.0 + res / 2), res,
+            GEOKEYS_4326, dtype="<i2", nodata=-32767, values=dem,
+            rows_per_strip=16,
+        )
+        del gy, gx, dem
+    from raquet_spark.sources.tiff_reader import geotiff_to_raquet
 
-        # bilinear warp variant: inverse-mapped 2x2 gather join
-        for _ in range(3):
-            t0 = time.perf_counter()
-            tiles_bl, _m = geotiff_to_raquet(
-                spark, n37, block_size=128, resampling="bilinear"
-            )
-            tiles_bl.count()
-            dt = time.perf_counter() - t0
-            timings["geotiff_import_n37_bilinear"] = round(
-                min(dt, timings.get("geotiff_import_n37_bilinear", dt)), 3)
+    # 3 iterations: the first import pays one-time JIT/codepath warmup
+    # (~12s cold, ~2.6s second, ~1.8s steady); min-of-2 was reporting
+    # the warmup tail as a regression
+    for _ in range(3):
+        t0 = time.perf_counter()
+        tiles_in, _m = geotiff_to_raquet(spark, n37, block_size=128)
+        tiles_in.count()
+        dt = time.perf_counter() - t0
+        timings["geotiff_import_n37"] = round(
+            min(dt, timings.get("geotiff_import_n37", dt)), 3)
+
+    # bilinear variant: the gather builder's 2x2 kernel blend
+    for _ in range(3):
+        t0 = time.perf_counter()
+        tiles_bl, _m = geotiff_to_raquet(
+            spark, n37, block_size=128, resampling="bilinear"
+        )
+        tiles_bl.count()
+        dt = time.perf_counter() - t0
+        timings["geotiff_import_n37_bilinear"] = round(
+            min(dt, timings.get("geotiff_import_n37_bilinear", dt)), 3)
+    if standin:
+        os.remove(n37)
 
     # xxhash64 minhash (r14 production escape hatch, benched r15): the
     # SAME operator path under both hashes so the delta isolates the

@@ -18,10 +18,11 @@ Three layers:
    interpretation): GDAL-semantics warp to the web-mercator tile grid
    at a zoom whose mercator resolution at the raster's center is at
    least as fine as the source (the reference's find_zoom intent). It
-   picks the strategy — a join-free fused gather for north-up
-   4326/3857 sources, else a target-driven warp join (broadcast or
-   shuffled hash) into ``operators/tiling.from_pixel_table``, or the
-   forward-map aggregation kernels — per the table in its docstring.
+   picks the strategy per the table in its docstring: the join-free
+   gather builder for every near/bilinear/cubic source of ≤ 100 MB,
+   whatever its grid; a shuffled-hash warp join into
+   ``operators/tiling.from_pixel_table`` above that; the forward-map
+   aggregation for the reducing kernels.
 
 Supported: classic AND BigTIFF, little- ("II") and big-endian ("MM"),
 strip or tile layout, compression none/LZW/deflate/PackBits
@@ -287,6 +288,9 @@ def read_tiff_structure(path: str) -> dict:
     raw = open_bytes(path)
     try:
         tags = read_ifd(raw)
+        size = len(raw)
+    except struct.error as e:
+        raise ValueError(f"TIFF header is truncated: {e}") from e
     finally:
         if hasattr(raw, "close"):
             raw.close()
@@ -330,12 +334,27 @@ def read_tiff_structure(path: str) -> dict:
     if tiled:
         seg_w, seg_h = tags[322][0], tags[323][0]
         offsets, counts = tags[324], tags[325]
-        segs_across = (width + seg_w - 1) // seg_w
     else:
         seg_w = width
         seg_h = tags.get(278, (height,))[0]
         offsets, counts = tags[273], tags[279]
-        segs_across = 1
+    # a header that disagrees with its own segment table (absurd or
+    # truncated dimensions, a cut-off file) fails here, before any
+    # planning sizes work by width × height
+    if seg_w <= 0 or seg_h <= 0:
+        raise ValueError(f"TIFF segment size {seg_w}x{seg_h} (must be > 0)")
+    segs_across = (width + seg_w - 1) // seg_w
+    n_segs = segs_across * -(-height // seg_h) * (spp if planar == 2 else 1)
+    if len(offsets) != n_segs or len(counts) != n_segs:
+        raise ValueError(
+            f"TIFF {width}x{height} implies {n_segs} segments; the header "
+            f"lists {len(offsets)} offsets and {len(counts)} byte counts"
+        )
+    end = max((o + n for o, n in zip(offsets, counts)), default=0)
+    if end > size:
+        raise ValueError(f"TIFF segments end past the {size}-byte file (truncated?)")
+    if compression == 1 and sum(counts) < width * height * spp * dtype.itemsize:
+        raise ValueError(f"uncompressed TIFF {width}x{height} needs more than {sum(counts)} bytes")
 
     # georeferencing: ModelPixelScale+Tiepoint or ModelTransformation
     if 33550 in tags and 33922 in tags:
@@ -1528,44 +1547,157 @@ def _kernel_sql(d: str, resampling: str) -> str:
     raise ValueError(f"unknown resampling {resampling!r}")
 
 
+def _kernel_np(d: np.ndarray, resampling: str) -> np.ndarray:
+    """:func:`_kernel_sql`'s numpy twin, op-for-op (same literals, same
+    left-assoc evaluation order), so identical float64 inputs produce
+    identical bits in either engine."""
+    t = np.abs(d)
+    if resampling == "bilinear":
+        return 1.0 - t
+    if resampling == "cubic":
+        inner = ((1.5 * t - 2.5) * t) * t + 1.0
+        outer = (((-0.5) * t + 2.5) * t - 4.0) * t + 2.0
+        return np.where(t <= 1.0, inner, outer)
+    raise ValueError(f"unknown resampling {resampling!r}")
+
+
+def _floor_idx(x: np.ndarray) -> np.ndarray:
+    """``CAST(floor(x) AS BIGINT)`` for source-index math. A NaN
+    coordinate (a NULL after the Arrow hop, which the SQL filters drop)
+    becomes a far-negative index, outside every grid."""
+    with np.errstate(invalid="ignore"):
+        f = np.clip(np.floor(x), -(2.0 ** 62), 2.0 ** 62)
+        return np.where(np.isnan(f), -(2.0 ** 62), f).astype("int64")
+
+
+def _stagger_sx_sql(st: tuple[float, float]) -> str:
+    """Containing source column on a STAGGERED grid (GRIB flag-table
+    3.4 bits 5/6): a row whose centers are shifted by ``off`` samples
+    contains ``fsx`` in cell ``floor(fsx - off)``, and the parity of
+    the row ``syn`` picks ``off`` from ``st``."""
+    return (
+        f"CAST(floor(fsx - (CASE WHEN pmod(syn, 2) = 0 "
+        f"THEN {st[0]}D ELSE {st[1]}D END)) AS BIGINT)"
+    )
+
+
+def _stagger_sx_np(fsx, syn, st: tuple[float, float]) -> np.ndarray:
+    """:func:`_stagger_sx_sql`'s numpy twin, op-for-op."""
+    return _floor_idx(fsx - np.where(np.mod(syn, 2) == 0, st[0], st[1]))
+
+
+def _row_u_sql(info: dict) -> str:
+    """Fractional in-row sample index on a REDUCED (ragged-row) grid,
+    over ``fsx`` and the row's point count ``_rn``: the target lon from
+    the affine x leg, in the row's own spacing — 360/_rn on global
+    circles (points at k·360/_rn), lon_span/(_rn − 1) on
+    endpoint-inclusive regional rows. No mod-360 wrap: straddling
+    regional grids are gated at parse, and a wrap would push targets
+    half a spacing west of column 0 to a spurious nodata seam."""
+    ox, a = info["transform"][:2]
+    lf, span = info.get("lon_first", 0.0), info.get("lon_span")
+    lon = f"(fsx * {a} + {ox})"
+    if span is not None:
+        return f"({lon} - {lf}) * (_rn - 1) / {span}D"
+    return f"({lon} - {lf}) * _rn / 360.0D"
+
+
+def _row_u_np(info: dict, fsx, rn) -> np.ndarray:
+    """:func:`_row_u_sql`'s numpy twin, op-for-op (``_rn`` promoted to
+    double as the engine promotes the bigint)."""
+    ox, a = info["transform"][:2]
+    lf, span = info.get("lon_first", 0.0), info.get("lon_span")
+    lon = fsx * a + ox
+    if span is not None:
+        return (lon - lf) * (rn - 1.0) / span
+    return (lon - lf) * rn / 360.0
+
+
 def gather_is_broadcast(info: dict, n_steps: int = 1) -> bool:
-    """Whether the warp gather join will broadcast the source (raw
-    source bytes × steps ≤ ~100 MB — see the strategy comment inside
-    :func:`_resampled_pixels`). The SINGLE size rule behind the fused
-    gate, the join hint and :func:`import_tiles`' ``aligned`` choice
-    (r17): a broadcast gather is map-only, so with the block-major
-    target grid the ``near`` path's pixels reach ``from_pixel_table``
-    tile-contiguous and the assembly can skip its exchange."""
+    """Whether the decoded source fits on the driver: raw source bytes
+    × steps ≤ ~100 MB. The one size rule of :func:`import_tiles` — such
+    sources go to the gather builder (:func:`_fused_gather_tiles`, one
+    collected copy broadcast to the build tasks), larger ones to the
+    shuffled-hash warp join. ``n_steps``: multi-step pixel tables carry
+    one full grid per step, so a 0.25° global grid (~8 MB/step) with
+    120 forecast steps is ~1 GB, not 8 MB."""
     return (
         info["width"] * info["height"] * info["n_bands"]
         * np.dtype(info["dtype"]).itemsize * max(1, int(n_steps))
     ) <= 100 * (1 << 20)
 
 
-def _merc_fs_exprs(info: dict, z: int, block_size: int) -> tuple[str, str]:
-    """(fsx, fsy) SQL expression strings in ``gx``/``gy`` for
-    geographic (4326) / web-mercator (3857) sources — the closed-form
-    inverse map from target pixel center to fractional source sample
-    coordinates. The SINGLE definition shared by the join-path warp
-    (:func:`_resampled_pixels`) and the fused separable index job
-    (:func:`_separable_src_fs`), so both evaluate byte-identical
-    expressions in the same engine (r18)."""
+def _affine_fs(info: dict, mx: str, my: str) -> tuple[str, str]:
+    """(fsx, fsy) SQL from source MODEL coordinates: the inverse
+    geotransform (sample i's center sits at fractional index i + 0.5)."""
     ox, a, b, oy, c, d = info["transform"]
     det = a * d - b * c
     if det == 0:
         raise ValueError("singular geotransform")
-    world = float((1 << z) * block_size)
-    cmx = f"((gx + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
-    cmy = f"({_ORIGIN_SHIFT} - (gy + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT})"
-    if info["epsg"] == 4326:
-        mox = f"({cmx} / {_ORIGIN_SHIFT} * 180.0D)"
-        moy = f"degrees(2.0D * atan(exp({cmy} / {_EARTH_R})) - {math.pi / 2.0})"
-    else:
-        mox, moy = cmx, cmy
-    u, v = f"({mox} - {ox})", f"({moy} - {oy})"
+    u, v = f"({mx} - {ox})", f"({my} - {oy})"
     return (
         f"({u} * {d} - {b} * {v}) / {det}",
         f"({-c} * {u} + {a} * {v}) / {det}",
+    )
+
+
+def _target_fs_exprs(
+    info: dict, z: int, block_size: int
+) -> tuple[list[tuple[str, str]], str, str]:
+    """(column bindings, fsx, fsy): the closed-form inverse map from the
+    target pixel center ``(gx, gy)`` to fractional SOURCE sample
+    coordinates, as SQL. 3857 sources take the mercator meters, 4326
+    sources the lon/lat degrees, projected and rotated-pole sources the
+    Snyder FORWARD projection of those degrees (:func:`_forward_steps`,
+    bound as named columns). The single definition behind both the
+    gather builder and the join path, so both see the same doubles."""
+    world = float((1 << z) * block_size)
+    cmx = f"((gx + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
+    cmy = f"({_ORIGIN_SHIFT} - (gy + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT})"
+    if info["epsg"] == 3857:
+        return [], *_affine_fs(info, cmx, cmy)
+    lon = f"({cmx} / {_ORIGIN_SHIFT} * 180.0D)"
+    lat = f"degrees(2.0D * atan(exp({cmy} / {_EARTH_R})) - {math.pi / 2.0})"
+    if info["epsg"] == 4326:
+        return [], *_affine_fs(info, lon, lat)
+    steps, x_e, y_e = _forward_steps(info)
+    return [("_lon", lon), ("_lat", lat), *steps], *_affine_fs(info, x_e, y_e)
+
+
+def _target_fs(
+    spark: SparkSession,
+    info: dict,
+    z: int,
+    block_size: int,
+    tile_ext: tuple[int, int, int, int],
+) -> DataFrame:
+    """``(_tid, gx, gy, fsx, fsy)`` for every pixel of the covering
+    target tile grid (:func:`_target_fs_exprs`), generated BLOCK-MAJOR
+    with whole tiles per partition: one ``spark.range`` row per tile
+    (``_tid``), exploded to its ``bs²`` pixels in row-major order. The
+    gather builder streams it tile by tile; the join path joins it on
+    the source index."""
+    tx0, ty0, tx1, ty1 = tile_ext
+    bs = block_size
+    ntx = tx1 - tx0 + 1
+    n_tiles = ntx * (ty1 - ty0 + 1)
+    n_part = max(1, min(spark.sparkContext.defaultParallelism, n_tiles))
+    tgt = (
+        spark.range(0, n_tiles, 1, n_part)
+        .selectExpr(
+            "id AS _tid", f"explode(sequence(0, {bs * bs - 1})) AS _o"
+        )
+        .selectExpr(
+            "_tid",
+            f"{tx0 * bs} + (_tid % {ntx}) * {bs} + _o % {bs} AS gx",
+            f"{ty0 * bs} + (_tid DIV {ntx}) * {bs} + _o DIV {bs} AS gy",
+        )
+    )
+    steps, fsx_e, fsy_e = _target_fs_exprs(info, z, bs)
+    for name, expr in steps:
+        tgt = tgt.withColumn(name, F.expr(expr))
+    return tgt.selectExpr(
+        "_tid", "gx", "gy", f"{fsx_e} AS fsx", f"{fsy_e} AS fsy"
     )
 
 
@@ -1574,9 +1706,9 @@ def _fsy_rows_interp(info: dict, gy0: int, npy: int, world: float):
     (Gaussian grids): row → lat is not affine, so fsy is interpolated
     on the driver (piecewise-linear between centers, linear beyond the
     outer centers like the affine path). Returns the float64 ``fsy``
-    vector for gy in [gy0, gy0+npy). The SINGLE definition shared by
-    the join path's broadcast rowmap and the fused separable index
-    (r18) — both floor the same doubles."""
+    vector for gy in [gy0, gy0+npy). The single definition shared by
+    the join path's broadcast rowmap and the gather builder's per-axis
+    index — both floor the same doubles."""
     lc = np.asarray(info["lat_centers"], dtype="f8")  # north → south
     if len(lc) < 2 or not (np.diff(lc) < 0).all():
         raise ValueError("lat_centers must be strictly north→south")
@@ -1600,30 +1732,13 @@ def _fsy_rows_interp(info: dict, gy0: int, npy: int, world: float):
 
 
 def _fused_gather_eligible(info: dict, resampling: str, n_steps: int = 1) -> bool:
-    """Whether the import can skip the warp JOIN entirely (r18): for a
-    broadcast-class source on a NORTH-UP affine grid (no rotation
-    terms) in 4326/3857, the source-coordinate map is SEPARABLE —
-    ``fsy`` depends only on ``gy`` and ``fsx`` only on ``gx`` — so two
-    tiny per-axis vectors plus a broadcast of the decoded source
-    replace the per-pixel broadcast hash join AND the per-pixel Python
-    boundary of the aligned assembly (guide §2.4/§8: decide with small
-    rows, move big rows once — here the per-pixel rows stop existing
-    at all). ``near`` gathers the containing cell; ``bilinear``/
-    ``cubic`` (r18 session 4) blend the separable 2×2/4×4 kernel
-    neighborhood in numpy, bit-identically to the join path's SQL
-    blend (see the kernel branch of :func:`_fused_gather_tiles`).
-    Staggered, ragged-row and projected sources keep the join path;
-    Gaussian (irregular-lat) grids qualify because their fsy is
-    already a driver-computed per-row vector."""
-    ox, a, b, oy, c, d = info["transform"]
-    return (
-        resampling in ("near", "bilinear", "cubic")
-        and gather_is_broadcast(info, n_steps)
-        and b == 0.0
-        and c == 0.0
-        and not info.get("stagger_x")
-        and info.get("row_ni") is None
-        and info["epsg"] in (4326, 3857)
+    """Whether :func:`import_tiles` builds the tiles with the gather
+    builder (:func:`_fused_gather_tiles`): every near/bilinear/cubic
+    import whose source fits :func:`gather_is_broadcast`, whatever the
+    grid. The reducing kernels keep the forward-map aggregate, larger
+    sources the shuffled-hash warp join."""
+    return resampling in ("near", "bilinear", "cubic") and gather_is_broadcast(
+        info, n_steps
     )
 
 
@@ -1634,22 +1749,19 @@ def _separable_src_fs(
     block_size: int,
     tile_ext: tuple[int, int, int, int],
 ):
-    """(fsx_by_gx, fsy_by_gy) float64 vectors over the target extent —
-    the same fractional source coordinates the join path computes, from
-    the same expressions, evaluated by the same JVM engine (one tiny
-    job over max(npx, npy) rows, so transcendental bit-identity with
-    the join path is by construction, not by numpy-vs-JVM luck).
-    ``lat_centers`` grids take fsy from the identical driver-side
-    interp the join path's rowmap uses. Downstream ``floor``/kernel
-    arithmetic on these doubles is plain IEEE-754 — bit-identical
-    between numpy and the JVM given identical inputs."""
+    """(fsx_by_gx, fsy_by_gy) float64 vectors over the target extent of
+    a NORTH-UP 4326/3857 grid, where ``fsx`` depends only on ``gx`` and
+    ``fsy`` only on ``gy``: the join path's expressions
+    (:func:`_target_fs_exprs`) evaluated by the same JVM engine in one
+    tiny job over max(npx, npy) rows, so transcendental bit-identity is
+    by construction, not by numpy-vs-JVM luck. ``lat_centers`` grids
+    take fsy from the driver-side interp the join path's rowmap uses."""
     tx0, ty0, tx1, ty1 = tile_ext
     bs = block_size
     gx0, gy0 = tx0 * bs, ty0 * bs
     npx = (tx1 - tx0 + 1) * bs
     npy = (ty1 - ty0 + 1) * bs
-    world = float((1 << z) * bs)
-    fsx_e, fsy_e = _merc_fs_exprs(info, z, bs)
+    _, fsx_e, fsy_e = _target_fs_exprs(info, z, bs)
     n = max(npx, npy)
     pdf = (
         spark.range(0, n, 1, 1)
@@ -1662,25 +1774,10 @@ def _separable_src_fs(
     )
     fsx = pdf["fsx"].to_numpy(dtype="float64")[:npx]
     if info.get("lat_centers") is not None:
-        fsy = _fsy_rows_interp(info, gy0, npy, world)
+        fsy = _fsy_rows_interp(info, gy0, npy, float((1 << z) * bs))
     else:
         fsy = pdf["fsy"].to_numpy(dtype="float64")[:npy]
     return fsx, fsy
-
-
-def _kernel_np(d: np.ndarray, resampling: str) -> np.ndarray:
-    """Separable resampling kernel weight — the numpy twin of
-    :func:`_kernel_sql`, op-for-op (same literals, same left-assoc
-    evaluation order), so identical float64 inputs produce identical
-    bits in either engine."""
-    t = np.abs(d)
-    if resampling == "bilinear":
-        return 1.0 - t
-    if resampling == "cubic":
-        inner = ((1.5 * t - 2.5) * t) * t + 1.0
-        outer = (((-0.5) * t + 2.5) * t - 4.0) * t + 2.0
-        return np.where(t <= 1.0, inner, outer)
-    raise ValueError(f"unknown resampling {resampling!r}")
 
 
 def _round_half_up_spark(x: np.ndarray) -> np.ndarray:
@@ -1732,35 +1829,41 @@ def _fused_gather_tiles(
     dense: bool = False,
     resampling: str = "near",
 ) -> DataFrame:
-    """Join-free nearest-warp import for the separable broadcast class
-    (:func:`_fused_gather_eligible`): collect the decoded source grid
-    once (the same rows the join path's BroadcastExchange would pull to
-    the driver — as packed ndarrays instead of a per-row hash
-    relation), broadcast it with the two separable index vectors, and
-    build each output tile in ONE numpy gather + encode inside a
-    ``mapInPandas`` over one row per tile. The per-target-pixel rows of
-    the join path (tile_count × block_size² × steps through a hash
-    probe and the Arrow boundary) never exist. Output is byte-identical
-    to ``_resampled_pixels(near) → from_pixel_table(aligned=True)``
-    (+ the dense nodata fill when ``dense``): same JVM-floored indices,
-    same verbatim value copies, same fill/astype/encode semantics —
-    pinned by test_fused_gather_matches_join_path.
+    """The gather builder: every tile of a near/bilinear/cubic import
+    of ≤ 100 MB (:func:`_fused_gather_eligible`), with no join and no
+    per-pixel shuffle. The decoded source is collected once (or
+    arrives collected from a driver-side decode), broadcast as packed
+    ndarrays, and each output tile is gathered (``near``) or blended
+    (``bilinear``/``cubic``) and encoded inside one ``mapInPandas``.
+    Output is byte-identical to the join path
+    (:func:`_resampled_pixels` → ``from_pixel_table`` + the dense fill),
+    pinned per grid class by tests/test_fused_gather.py.
 
-    ``resampling='bilinear'``/``'cubic'`` (r18 session 4): the kernel
-    neighborhood is separable too — per-axis neighbor-index and
-    kernel-weight vectors (``floor(fs - 0.5) + k`` and the
-    :func:`_kernel_np` weights, every op IEEE float64 on the
-    JVM-computed ``fs`` doubles, so bit-identical to the join path's
-    SQL). Each tile blends its 2×2/4×4 gathered planes with the SAME
-    accumulation semantics as the SQL ``SUM(CASE WHEN valid …)``:
-    contributions in the join path's (kx, ky) explode order, added to
-    zero-initialised sums (Spark's SUM is ``coalesce(sum, 0) + x``, so
-    a lone ``-0.0`` term sums to ``+0.0``), nodata/out-of-bounds terms
-    skipped, ``num/den`` guarded by ``den <> 0`` (a pixel with no valid
-    term keeps ``den == 0`` and the fill, like the SQL NULL), and
-    Spark's HALF_UP ``round()`` replicated by
-    :func:`_round_half_up_spark` for integer bands — pinned by the
-    bilinear/cubic cases of test_fused_gather.py."""
+    The grids differ only in where the per-pixel source coordinates
+    come from:
+
+    - north-up 4326/3857 grids (staggered and reduced-Gaussian rows
+      too): two per-axis vectors (:func:`_separable_src_fs`) drive a
+      ``mapInPandas`` over one row per tile, about 8 tiles per task;
+    - projected and rotated grids: the per-pixel ``(fsx, fsy)`` stream
+      of :func:`_target_fs` enters the ``mapInPandas`` tile by tile.
+      Each row carries its tile id; a stream that is not
+      tile-contiguous raises ``ValueError``, never a half tile.
+
+    Either way the coordinates are the join path's own doubles, and the
+    index and kernel math on them runs on 2-D (broadcast) arrays in
+    IEEE float64, each piece the op-for-op twin of the SQL it mirrors
+    (``floor``, :func:`_stagger_sx_np`, :func:`_row_u_np`,
+    :func:`_kernel_np`). ``near`` copies the containing cell verbatim.
+    The kernel blend replays the join path's fold over a pixel's taps:
+    explode order, summed onto zeros (``coalesce(s, 0.0) + w * v``, so
+    a lone ``-0.0`` term sums to ``+0.0``), nodata, NaN and
+    out-of-grid terms skipped, ``num/den`` only where
+    ``den <> 0`` (else the fill, like the SQL NULL), and Spark's
+    HALF_UP ``round()`` replayed by :func:`_round_half_up_spark` for
+    integer bands. A tile with no covered (near) or blended (kernel)
+    pixel is emitted only when ``dense``, as the all-fill tile of the
+    join path's anti-join."""
     from raquet_spark.core.metadata import parse_nodata
     from raquet_spark.functions import quadbin as qb
     from raquet_spark.functions.bands import DTYPES, encode_block
@@ -1770,38 +1873,22 @@ def _fused_gather_tiles(
     tx0, ty0, tx1, ty1 = tile_ext
     bs = block_size
     h, w = info["height"], info["width"]
+    _, _, b, _, c, _ = info["transform"]
     bands = [
-        (b["name"], b["type"], parse_nodata(b.get("nodata")))
-        for b in metadata["bands"]
+        (bm["name"], bm["type"], parse_nodata(bm.get("nodata")))
+        for bm in metadata["bands"]
     ]
-    fsx, fsy = _separable_src_fs(spark, info, z, bs, tile_ext)
     kernel = resampling in ("bilinear", "cubic")
-    if kernel:
-        klo, khi = (0, 1) if resampling == "bilinear" else (-1, 2)
-        # per-axis neighbor indices + kernel weights, precomputed for
-        # the whole extent exactly as the join path's SQL evaluates
-        # them: ib = floor(fs - 0.5); neighbor k is ib + k with weight
-        # kernel(fs - (neighbor + 0.5))
-        ibx, iby = np.floor(fsx - 0.5), np.floor(fsy - 0.5)
-        xk = [ibx + k for k in range(klo, khi + 1)]
-        yk = [iby + k for k in range(klo, khi + 1)]
-        kern = (
-            [s.astype("int64") for s in xk],
-            [s.astype("int64") for s in yk],
-            [_kernel_np(fsx - (s + 0.5), resampling) for s in xk],
-            [_kernel_np(fsy - (s + 0.5), resampling) for s in yk],
-        )
-        int_out = np.dtype(info["dtype"]).kind in "iu"
-        sxn = syn = None
-    else:
-        # floor of a double is exact in both engines: the same
-        # containing-cell indices as the join path's floor(fsx)
-        kern, int_out = None, False
-        sxn, syn = np.floor(fsx).astype("int64"), np.floor(fsy).astype("int64")
+    int_out = kernel and np.dtype(info["dtype"]).kind in "iu"
+    taps = range(0, 2) if resampling == "bilinear" else range(-1, 3)
+    st = info.get("stagger_x")
+    rows = info.get("row_ni")
+    if rows is not None:
+        rows = np.asarray(rows, dtype="int64")
+    wrap = bool(info.get("lon_global")) and info.get("lon_span") is None
+    separable = info["epsg"] in (4326, 3857) and b == 0.0 and c == 0.0
+    axes = _separable_src_fs(spark, info, z, bs, tile_ext) if separable else None
 
-    # `px` may arrive pre-collected (a driver-local decode, e.g. the
-    # classic-NetCDF fast path) — this function's next step is the
-    # driver collect either way
     pdf = px if isinstance(px, pd.DataFrame) else px.toPandas()
     sx = pdf["sx"].to_numpy(dtype="int64")
     sy = pdf["sy"].to_numpy(dtype="int64")
@@ -1810,149 +1897,185 @@ def _fused_gather_tiles(
         ti = np.searchsorted(tvals, pdf[extra_key].to_numpy())
     else:
         tvals, ti = None, 0
+    nt = len(tvals) if tvals is not None else 1
     grids: dict[str, np.ndarray] = {}
     for name, btype, nodata in bands:
-        fill = 0 if nodata is None else nodata
         vals = pdf[name].to_numpy()
-        if kernel:
-            # the kernel blend consumes the PX-TABLE values (the join
-            # path's SUM sees the pixel-table column cast to DOUBLE,
-            # BEFORE any storage narrowing) — keep the native dtype so
-            # the later astype(float64) is the same exact cast
-            g = np.full(
-                (len(tvals) if tvals is not None else 1, h, w),
-                fill,
-                dtype=vals.dtype,
-            )
-            g[ti, sy, sx] = vals
-        else:
-            # storage dtype now = the same elementwise astype the
-            # assembly applies after the join (float64→float32 is one
-            # IEEE round-to-nearest either place); absent source cells
-            # (e.g. GRIB bitmap-omitted points) stay at the fill value
-            # — exactly what a no-match target pixel gets from the
-            # join path
-            g = np.full(
-                (len(tvals) if tvals is not None else 1, h, w),
-                fill,
-                dtype=DTYPES[btype],
-            )
-            g[ti, sy, sx] = vals.astype(DTYPES[btype])
+        # the kernel blend consumes the PX-TABLE values (the join path's
+        # SUM sees the pixel-table column as DOUBLE, before any storage
+        # narrowing); near stores the storage dtype now — the same
+        # elementwise astype the assembly applies after the join.
+        # Absent source cells (GRIB bitmap-omitted points) keep the
+        # fill, what a no-match target pixel gets from the join path.
+        dt = vals.dtype if kernel else DTYPES[btype]
+        g = np.full((nt, h, w), 0 if nodata is None else nodata, dtype=dt)
+        g[ti, sy, sx] = vals.astype(dt)
         grids[name] = g
-    bvar = spark.sparkContext.broadcast((sxn, syn, tvals, grids, kern))
+    bvar = spark.sparkContext.broadcast((grids, tvals, axes))
 
-    ntx = tx1 - tx0 + 1
-    n_tiles = ntx * (ty1 - ty0 + 1)
-    # ~8 tiles per task floor: a per-tile gather+encode is sub-ms, so
-    # one task per tile at high core counts is pure scheduling overhead
-    # (measured as a mild c8-faster-than-c32 floor effect); at real
-    # scale n_tiles/8 >> cores and the width is the full parallelism
-    n_part = max(
-        1,
-        min(spark.sparkContext.defaultParallelism, (n_tiles + 7) // 8),
-    )
-    schema = "block bigint" + (
-        f", {extra_key} double" if extra_key is not None else ""
-    ) + "".join(f", {name} binary" for name, _, _ in bands)
+    def near_index(fx, fy):
+        # the containing source cell, as the join path's near SQL
+        # picks it; returns the in-grid mask and the gathered indices
+        syn = _floor_idx(fy)
+        oky = (syn >= 0) & (syn < h)
+        if rows is None:
+            sxn = _stagger_sx_np(fx, syn, st) if st else _floor_idx(fx)
+            ok = oky & (sxn >= 0) & (sxn < w)
+        else:
+            rn = np.where(oky, rows[np.clip(syn, 0, len(rows) - 1)], 0)
+            sxn = _floor_idx(_row_u_np(info, fx, rn) + 0.5)
+            if wrap:
+                sxn = np.mod(sxn, np.maximum(rn, 1))
+            ok = oky & (sxn >= 0) & (sxn < rn)
+        syn, sxn, ok = np.broadcast_arrays(syn, sxn, ok)
+        return ok, (syn[ok], sxn[ok])
 
-    def gather(x0, y0, si, sxn_b, syn_b, grids_b):
-        # containing-cell copy, verbatim; the join path emits no row for
-        # a tile with zero in-bounds pixels
-        cols = sxn_b[x0:x0 + bs]
-        rows_ = syn_b[y0:y0 + bs]
-        okc = (cols >= 0) & (cols < w)
-        okr = (rows_ >= 0) & (rows_ < h)
-        covered = bool(okr.any() and okc.any())
+    def kernel_taps(fx, fy):
+        # (in-grid mask, clipped indices, weight) per kernel tap, in
+        # the join path's explode order: kx outer / ky inner on affine
+        # rows, ky outer / kx inner on reduced rows
+        out = []
+        if rows is None:
+            ibx, iby = _floor_idx(fx - 0.5), _floor_idx(fy - 0.5)
+            for kx in taps:
+                sxn = ibx + kx
+                wx = _kernel_np(fx - (sxn + 0.5), resampling)
+                for ky in taps:
+                    syn = iby + ky
+                    wy = _kernel_np(fy - (syn + 0.5), resampling)
+                    ok = (sxn >= 0) & (sxn < w) & (syn >= 0) & (syn < h)
+                    out.append((ok, syn, sxn, wx * wy))
+        else:
+            j0 = _floor_idx(fy - 0.5)
+            for ky in taps:
+                syn = j0 + ky
+                oky = (syn >= 0) & (syn < h)
+                wy = _kernel_np(fy - (syn + 0.5), resampling)
+                rn = np.where(oky, rows[np.clip(syn, 0, len(rows) - 1)], 0)
+                u = _row_u_np(info, fx, rn)
+                k0 = _floor_idx(u)
+                for kx in taps:
+                    k = k0 + kx
+                    sxn = np.mod(k, np.maximum(rn, 1)) if wrap else k
+                    # x weight from the UNWRAPPED index: the kernel sees
+                    # the true signed offset at the seam
+                    wt = wy * _kernel_np(u - k, resampling)
+                    out.append((oky & (sxn >= 0) & (sxn < rn), syn, sxn, wt))
+        return [
+            (ok, np.clip(syn, 0, h - 1), np.clip(sxn, 0, w - 1), wt)
+            for ok, syn, sxn, wt in out
+            if ok.any()
+        ]
+
+    def fill_tile(btype, nodata):
+        return np.full((bs, bs), 0 if nodata is None else nodata, dtype=DTYPES[btype])
+
+    def gather(index, grids_b, si):
+        ok, sel = index
         tiles = {}
         for name, btype, nodata in bands:
-            tile = np.full((bs, bs), 0 if nodata is None else nodata,
-                           dtype=DTYPES[btype])
-            if covered:
-                tile[np.ix_(okr, okc)] = grids_b[name][si][rows_[okr]][:, cols[okc]]
-            tiles[name] = tile
-        return tiles, covered
+            tiles[name] = tile = fill_tile(btype, nodata)
+            tile[ok] = grids_b[name][si][sel]
+        return tiles, bool(ok.any())
 
-    def blend(x0, y0, si, kern_b, grids_b):
-        # the numpy twin of the join path's SUM(CASE WHEN valid THEN
-        # w*v)/SUM(w): contributions in the (kx, ky) explode order,
-        # invalid terms skipped; the join path emits a (tile, step) row
-        # only when at least one pixel blended non-NULL
-        sxk_b, syk_b, wxk_b, wyk_b = kern_b
-        cxs = [s[x0:x0 + bs] for s in sxk_b]
-        rys = [s[y0:y0 + bs] for s in syk_b]
-        wxs = [v[x0:x0 + bs] for v in wxk_b]
-        wys = [v[y0:y0 + bs] for v in wyk_b]
-        okx = [(s >= 0) & (s < w) for s in cxs]
-        oky = [(s >= 0) & (s < h) for s in rys]
-        ccx = [np.clip(s, 0, w - 1) for s in cxs]
-        ccy = [np.clip(s, 0, h - 1) for s in rys]
+    def blend(index, grids_b, si):
         tiles, any_valid = {}, False
         for name, btype, nodata in bands:
             gband = grids_b[name][si]
             num = np.zeros((bs, bs))
             den = np.zeros((bs, bs))
-            for ix in range(len(cxs)):
-                if not okx[ix].any():
-                    continue
-                for iy in range(len(rys)):
-                    m2 = oky[iy][:, None] & okx[ix][None, :]
-                    if not m2.any():
-                        continue
-                    v = gband[ccy[iy][:, None], ccx[ix][None, :]].astype("float64")
-                    if nodata is not None:
-                        if nodata != nodata:  # NaN
-                            m2 = m2 & ~np.isnan(v)
-                        else:
-                            m2 = m2 & (v != float(nodata))
-                    w2 = wys[iy][:, None] * wxs[ix][None, :]
-                    num = np.where(m2, num + w2 * v, num)
-                    den = np.where(m2, den + w2, den)
+            for ok, syn, sxn, wt in index:
+                v = gband[syn, sxn].astype("float64")
+                m = ok & ~np.isnan(v)
+                if nodata is not None and nodata == nodata:
+                    m &= v != float(nodata)
+                num = np.where(m, num + wt * v, num)
+                den = np.where(m, den + wt, den)
             okp = den != 0.0
-            tile = np.full((bs, bs), 0 if nodata is None else nodata,
-                           dtype=DTYPES[btype])
+            tiles[name] = tile = fill_tile(btype, nodata)
             if okp.any():
                 any_valid = True
                 out = num[okp] / den[okp]
                 if int_out:
                     out = _round_half_up_spark(out)
                 tile[okp] = out.astype(DTYPES[btype])
-            tiles[name] = tile
         return tiles, any_valid
 
-    def build(batches):
-        sxn_b, syn_b, tvals_b, grids_b, kern_b = bvar.value
-        nt = len(tvals_b) if tvals_b is not None else 1
-        for task_pdf in batches:
-            out: dict[str, list] = {"block": []}
+    ntx = tx1 - tx0 + 1
+    n_tiles = ntx * (ty1 - ty0 + 1)
+    names = ["block"] + ([extra_key] if extra_key is not None else [])
+    names += [name for name, _, _ in bands]
+
+    def emit(out, tid, fx, fy, grids_b, tvals_b):
+        tx, ty = tx0 + tid % ntx, ty0 + tid // ntx
+        index = kernel_taps(fx, fy) if kernel else near_index(fx, fy)
+        for si in range(nt):
+            tiles, valid = (blend if kernel else gather)(index, grids_b, si)
+            # dense callers get the all-fill tile (the anti-join
+            # literal's byte-identical twin)
+            if not (valid or dense):
+                continue
+            out["block"].append(qb.py_tile_to_cell(tx, ty, z))
             if extra_key is not None:
-                out[extra_key] = []
-            for name, _, _ in bands:
-                out[name] = []
+                out[extra_key].append(float(tvals_b[si]))
+            for name, btype, _ in bands:
+                out[name].append(
+                    encode_block(tiles[name].reshape(-1), btype, compression)
+                )
+
+    def build_axes(batches):
+        grids_b, tvals_b, (fsx, fsy) = bvar.value
+        for task_pdf in batches:
+            out = {n: [] for n in names}
             for tid in task_pdf["id"].tolist():
-                tx = tx0 + tid % ntx
-                ty = ty0 + tid // ntx
-                x0 = (tx - tx0) * bs
-                y0 = (ty - ty0) * bs
-                for si in range(nt):
-                    if kern_b is not None:
-                        tiles, valid = blend(x0, y0, si, kern_b, grids_b)
-                    else:
-                        tiles, valid = gather(x0, y0, si, sxn_b, syn_b, grids_b)
-                    # dense callers get the all-fill tile (the anti-join
-                    # literal's byte-identical twin)
-                    if not (valid or dense):
-                        continue
-                    out["block"].append(qb.py_tile_to_cell(tx, ty, z))
-                    if extra_key is not None:
-                        out[extra_key].append(float(tvals_b[si]))
-                    for name, btype, _ in bands:
-                        out[name].append(
-                            encode_block(tiles[name].reshape(-1), btype, compression)
-                        )
+                x0, y0 = (tid % ntx) * bs, (tid // ntx) * bs
+                emit(out, tid, fsx[None, x0:x0 + bs], fsy[y0:y0 + bs, None],
+                     grids_b, tvals_b)
             yield pd.DataFrame(out)
 
-    return spark.range(0, n_tiles, 1, n_part).mapInPandas(
-        build, schema=schema
+    def build_stream(batches):
+        # each run of bs² rows must be one tile, seen once: a split or
+        # interleaved tile fails the job, never a half tile
+        grids_b, tvals_b, _ = bvar.value
+        buf, seen = None, set()
+        for pdf in batches:
+            buf = pdf if buf is None else pd.concat([buf, pdf], ignore_index=True)
+            out = {n: [] for n in names}
+            while len(buf) >= bs * bs:
+                tile, buf = buf.iloc[:bs * bs], buf.iloc[bs * bs:]
+                tid = int(tile["_tid"].iloc[0])
+                if tid in seen or (tile["_tid"] != tid).any():
+                    raise ValueError(
+                        f"gather builder: tile {tid} is not tile-contiguous "
+                        "in the coordinate stream"
+                    )
+                seen.add(tid)
+                emit(out, tid, tile["fsx"].to_numpy("float64").reshape(bs, bs),
+                     tile["fsy"].to_numpy("float64").reshape(bs, bs),
+                     grids_b, tvals_b)
+            yield pd.DataFrame(out)
+        if buf is not None and len(buf):
+            raise ValueError(
+                "gather builder: the coordinate stream is not "
+                "tile-contiguous (it ends inside a tile)"
+            )
+
+    schema = ", ".join(
+        f"{n} {'bigint' if n == 'block' else 'double' if n == extra_key else 'binary'}"
+        for n in names
+    )
+    if separable:
+        # ~8 tiles per task floor: a per-tile gather+encode is sub-ms,
+        # so one task per tile at high core counts is pure scheduling
+        # overhead; at real scale n_tiles/8 >> cores
+        n_part = max(1, min(spark.sparkContext.defaultParallelism, (n_tiles + 7) // 8))
+        return spark.range(0, n_tiles, 1, n_part).mapInPandas(
+            build_axes, schema=schema
+        )
+    return (
+        _target_fs(spark, info, z, bs, tile_ext)
+        .select("_tid", "fsx", "fsy")
+        .mapInPandas(build_stream, schema=schema)
     )
 
 
@@ -1967,160 +2090,80 @@ def _resampled_pixels(
     extra_cols: tuple[str, ...] = (),
     n_steps: int = 1,
 ) -> DataFrame:
-    """Target-driven warp for ``bilinear``/``cubic`` import resampling
-    (reference: --resampling, /root/reference/raquet/cli.py:457).
+    """Target-driven warp JOIN for near/bilinear/cubic sources too large
+    for the gather builder (the reference CLI's ``--resampling``).
 
-    The covering target pixel grid is generated distributed
-    (``spark.range`` over the tile-aligned extent), each target center
-    is inverse-mapped to fractional SOURCE sample coordinates in
-    closed form, the 2×2 (bilinear) / 4×4 (cubic) neighborhood indices
-    are exploded, and one equi-join on (sx, sy) gathers the samples —
-    candidate volume is 4×/16× the OUTPUT size, never source×target.
-    Nodata samples drop out of the blend and the kernel renormalizes
-    (GDAL's masked-resampling behavior). Projected sources go through
-    the closed-form Snyder FORWARD projections (:func:`_forward_steps`),
-    so every supported CRS warps target-driven.
-
-    The target grid is generated BLOCK-MAJOR with whole tiles per
-    partition (r17): one ``spark.range`` row per output tile, exploded
-    to its ``bs²`` pixels, so with a broadcast gather join (the
-    ≤100 MB source class — most single-raster conversions) the
-    ``near`` path's output arrives at ``from_pixel_table`` already
-    tile-contiguous within partitions and the tile assembly needs NO
-    exchange at all (``aligned=True`` — guide §8 "co-locate instead
-    of join"). The pixel SET is unchanged — only generation order —
-    and the kernel paths' blend sums are order-stable because every
-    contribution of a target pixel is exploded from that pixel's own
-    row (adjacent, (ky, kx)-ordered, single partition)."""
-    ox, a, b, oy, c, d = info["transform"]
-    det = a * d - b * c
-    if det == 0:
-        raise ValueError("singular geotransform")
+    Every pixel of the covering target grid (:func:`_target_fs`) carries
+    its fractional SOURCE sample coordinates; ``near`` picks the
+    containing cell, ``bilinear``/``cubic`` explode the 2×2 / 4×4
+    neighborhood, and one equi-join on (sx, sy) gathers the samples —
+    candidate volume is 1×/4×/16× the OUTPUT size, never
+    source×target. Nodata and NaN samples drop out of the blend and the
+    kernel renormalizes (GDAL's masked-resampling behavior). The join
+    is a shuffled hash join sized by the source rows: every source that
+    reaches it is past the ~100 MB driver bound
+    (:func:`gather_is_broadcast`)."""
     tx0, ty0, tx1, ty1 = tile_ext
     bs = block_size
-    gx0, gy0 = tx0 * bs, ty0 * bs
-    ntx = tx1 - tx0 + 1
-    n_tiles = ntx * (ty1 - ty0 + 1)
-    npx, npy = ntx * bs, (ty1 - ty0 + 1) * bs
+    gy0 = ty0 * bs
+    npy = (ty1 - ty0 + 1) * bs
     world = float((1 << z) * bs)
-
-    n_part = max(1, min(spark.sparkContext.defaultParallelism, n_tiles))
-    tgt = (
-        spark.range(0, n_tiles, 1, n_part)
-        .selectExpr(
-            "id AS _tid", f"explode(sequence(0, {bs * bs - 1})) AS _o"
-        )
-        .selectExpr(
-            f"{gx0} + (_tid % {ntx}) * {bs} + _o % {bs} AS gx",
-            f"{gy0} + (_tid DIV {ntx}) * {bs} + _o DIV {bs} AS gy",
-        )
+    tgt = _target_fs(spark, info, z, bs, tile_ext).select(
+        "gx", "gy", "fsx", "fsy"
     )
-    if info["epsg"] in (4326, 3857):
-        # target pixel center -> fractional source sample coords, as
-        # one closed form shared with the fused separable index
-        # (_merc_fs_exprs keeps both paths byte-identical, r18)
-        fsx_e, fsy_e = _merc_fs_exprs(info, z, block_size)
-        tgt = tgt.selectExpr("gx", "gy", f"{fsx_e} AS fsx", f"{fsy_e} AS fsy")
-    else:
-        # target pixel center -> web-mercator meters
-        cmx = f"((gx + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
-        cmy = f"({_ORIGIN_SHIFT} - (gy + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT})"
-        # projected source: mercator -> lon/lat -> Snyder forward
-        tgt = tgt.withColumn(
-            "_lon", F.expr(f"{cmx} / {_ORIGIN_SHIFT} * 180.0D")
-        ).withColumn(
-            "_lat",
-            F.expr(f"degrees(2.0D * atan(exp({cmy} / {_EARTH_R})) - {math.pi / 2.0})"),
-        )
-        fsteps, x_e, y_e = _forward_steps(info)
-        for name, expr in fsteps:
-            tgt = tgt.withColumn(name, F.expr(expr))
-        mox, moy = x_e, y_e
-        # fractional source sample coords (sample i's center sits at i + 0.5)
-        u, v = f"({mox} - {ox})", f"({moy} - {oy})"
-        tgt = tgt.selectExpr(
-            "gx",
-            "gy",
-            f"({u} * {d} - {b} * {v}) / {det} AS fsx",
-            f"({-c} * {u} + {a} * {v}) / {det} AS fsy",
-        )
-    lat_centers = info.get("lat_centers")
-    if lat_centers is not None:
+    row_ni = info.get("row_ni")  # reduced grids: ragged row widths
+    if info.get("lat_centers") is not None:
         # IRREGULAR row latitudes (Gaussian grids, GRIB 3.40): row →
         # lat is not affine, so the per-target-ROW fractional source
-        # row is computed on the driver (row center i sits at fsy =
-        # i + 0.5, piecewise-linear between centers, linear beyond the
-        # outer centers like the affine path — _fsy_rows_interp, shared
-        # with the fused separable index) and broadcast-joined on
-        # gy — npy entries, O(thousands); everything else (the x
-        # affine, the gather joins, the kernels) is untouched.
+        # row is computed on the driver (_fsy_rows_interp, shared with
+        # the gather builder) and broadcast-joined on gy — npy
+        # entries, O(thousands); the x affine, the gather join and the
+        # kernels are untouched.
+        if row_ni is not None and resampling not in ("near", "bilinear", "cubic"):
+            raise NotImplementedError(
+                "reduced (ragged-row) grids resample nearest, bilinear, or cubic only"
+            )
+        # ``_rn``: the containing row's point count on reduced grids
         gys = np.arange(gy0, gy0 + npy, dtype="f8")
         fsy_t = _fsy_rows_interp(info, gy0, npy, world)
-        row_ni = info.get("row_ni")  # reduced grids: ragged row widths
-        if row_ni is not None:
-            if resampling not in ("near", "bilinear", "cubic"):
-                raise NotImplementedError(
-                    "reduced (ragged-row) grids resample nearest, "
-                    "bilinear, or cubic only"
-                )
-            syn_t = np.floor(fsy_t).astype("i8")
-            rn_t = np.where(
-                (syn_t >= 0) & (syn_t < len(row_ni)),
-                np.asarray(row_ni, dtype="i8")[
-                    np.clip(syn_t, 0, len(row_ni) - 1)
-                ],
-                0,
-            )
-            rowmap = spark.createDataFrame(
-                [(int(g), float(f), int(rn))
-                 for g, f, rn in zip(gys, fsy_t, rn_t)],
-                "gy bigint, _fsy_row double, _rn bigint",
-            )
-        else:
-            rowmap = spark.createDataFrame(
-                [(int(g), float(f)) for g, f in zip(gys, fsy_t)],
-                "gy bigint, _fsy_row double",
-            )
+        syn_t = np.floor(fsy_t).astype("i8")
+        rn_t = np.zeros(npy, dtype="i8") if row_ni is None else np.where(
+            (syn_t >= 0) & (syn_t < len(row_ni)),
+            np.asarray(row_ni, dtype="i8")[np.clip(syn_t, 0, len(row_ni) - 1)],
+            0,
+        )
+        rowmap = spark.createDataFrame(
+            [(int(g), float(f), int(rn)) for g, f, rn in zip(gys, fsy_t, rn_t)],
+            "gy bigint, _fsy_row double, _rn bigint",
+        )
         tgt = (
             tgt.drop("fsy")
             .join(F.broadcast(rowmap), "gy")
             .withColumnRenamed("_fsy_row", "fsy")
         )
-    n_bands = info["n_bands"]
-    band_cols = [f"band_{i + 1}" for i in range(n_bands)]
-    # the importer knows the exact source size at plan time — decide
-    # the gather-join strategy explicitly instead of letting Catalyst
-    # size-estimate the mapInPandas decode output (it propagates the
-    # tiny segment-list size, so the threshold would broadcast ANY
-    # source, including one too large to hash-build on the driver):
-    # broadcast when the raw source fits ~100 MB, pin a shuffled hash
-    # join above it (partitioned co-location, no driver funnel).
-    # n_steps: the px table carries ONE FULL GRID PER TIME STEP
-    # (GRIB/NetCDF multi-step imports, extra_cols=("time_cf",)), so the
-    # broadcast-side size is grid_bytes x steps — a 0.25-deg global
-    # grid is ~8 MB/step but 100+ forecast steps make it ~1 GB, past
-    # the 8 GB broadcast limit's comfort zone and a driver OOM risk.
-    broadcast_src = gather_is_broadcast(info, n_steps)
-    src_rows = info["width"] * info["height"] * max(1, int(n_steps))
+    band_cols = [f"band_{i + 1}" for i in range(info["n_bands"])]
+    # the importer knows the exact source size at plan time, so the
+    # shuffled hash join sizes its own width (r15, probe-found): at the
+    # session default a >100 MB source splits into src_rows/width
+    # per-task hash builds — 61M pixel rows over 32 tasks OOMed the
+    # build. A NUMBERED repartition on the join keys pins the width
+    # against AQE coalescing (the build blow-up is in-memory state,
+    # invisible to byte-based coalescing) and the target side
+    # co-shuffles to match; 250k rows/task keeps each build ~tens of
+    # MB. The hint keeps Catalyst from broadcasting on its own
+    # estimate of the decode output (the tiny segment list's size).
+    from raquet_spark.session import derive_shuffle_width
 
-    def _hinted(src: DataFrame) -> DataFrame:
-        if broadcast_src:
-            return F.broadcast(src)
-        # the SHJ path must also size its own width (r15, probe-found):
-        # at the session default a >100 MB source splits into
-        # src_rows/width per-task hash builds — 61M pixel rows over 32
-        # tasks OOMed the build ("not enough memory to build hash
-        # map"). The importer knows src_rows exactly; a NUMBERED
-        # repartition on the join keys pins the width against AQE
-        # coalescing (the build blow-up is in-memory state, invisible
-        # to byte-based coalescing) and the target side co-shuffles to
-        # match. 250k rows/task keeps each build ~tens of MB.
-        from raquet_spark.session import derive_shuffle_width
-
-        w = derive_shuffle_width(
-            spark, src_rows, target_rows_per_task=250_000
-        )
-        return src.repartition(w, "sxn", "syn").hint("shuffle_hash")
+    width = derive_shuffle_width(
+        spark, info["width"] * info["height"] * max(1, int(n_steps)),
+        target_rows_per_task=250_000,
+    )
+    src = (
+        px.selectExpr("sx AS sxn", "sy AS syn", *extra_cols, *band_cols)
+        .repartition(width, "sxn", "syn")
+        .hint("shuffle_hash")
+    )
+    wrap = info.get("lon_global") and info.get("lon_span") is None
     if resampling == "near":
         # GDAL's nearest semantics: the source CELL CONTAINING each
         # target center (inverse mapping) — DENSE output even when the
@@ -2128,193 +2171,140 @@ def _resampled_pixels(
         # which leaves holes wherever no source center lands. One
         # equi-join, ≤1 source row per target pixel, values copied
         # verbatim (nodata included).
-        if info.get("row_ni") is not None:
-            # ragged rows (reduced Gaussian): the x lookup is per-row
-            # — recover the target lon from the affine fsx, then index
-            # into the row's own 360/_rn spacing, wrapping on global
-            # circles. Same containing-cell convention as floor(fsx)
-            # (centers sit at k + 0.5).
-            lon_e = f"(fsx * {a} + {ox})"
-            lf = info.get("lon_first", 0.0)
-            span = info.get("lon_span")
-            if span is not None:
-                # regional endpoint-INCLUSIVE rows (GRIB1/GRIB2
-                # quasi-regular lat/lon): pl points span lon_span with
-                # spacing span/(pl-1); nearest point by rounding. NO
-                # mod-360 wrap here: antimeridian-straddling regional
-                # grids are typed-gated at parse time, and a wrap
-                # would push targets half a spacing WEST of column 0
-                # (which round to 0, like the affine path's west edge)
-                # to a spurious nodata seam.
-                k_e = (
-                    f"CAST(floor(({lon_e} - {lf}) * (_rn - 1) "
-                    f"/ {span}D + 0.5D) AS BIGINT)"
-                )
-            else:
-                k_e = (
-                    f"CAST(floor(({lon_e} - {lf}) * _rn / 360.0D + 0.5D) "
-                    "AS BIGINT)"
-                )
-            sx_e = (
-                f"((({k_e}) % _rn) + _rn) % _rn"
-                if info.get("lon_global") else k_e
-            )
+        if row_ni is not None:
+            # ragged rows (reduced Gaussian): the nearest point of the
+            # row's own spacing, wrapping on global circles
             cells = (
                 tgt.where("_rn > 0")
                 .selectExpr(
                     "gx", "gy", "_rn",
-                    f"{sx_e} AS sxn",
+                    f"CAST(floor({_row_u_sql(info)} + 0.5D) AS BIGINT) AS _k",
                     "CAST(floor(fsy) AS BIGINT) AS syn",
+                )
+                .selectExpr(
+                    "gx", "gy", "_rn", "syn",
+                    "pmod(_k, _rn) AS sxn" if wrap else "_k AS sxn",
                 )
                 .where(
                     "sxn >= 0 AND sxn < _rn "
                     f"AND syn >= 0 AND syn < {info['height']}"
                 )
-                .select("gx", "gy", "sxn", "syn")
             )
         else:
             st = info.get("stagger_x")
-            if st:
-                # staggered rows (GRIB flag-table 3.4 bits 5/6): the
-                # containing source cell of a row whose centers are
-                # shifted by `off` samples is floor(fsx - off) — row
-                # parity decides which offset applies
-                sx_e = (
-                    f"CAST(floor(fsx - (CASE WHEN pmod(syn, 2) = 0 "
-                    f"THEN {st[0]}D ELSE {st[1]}D END)) AS BIGINT)"
-                )
-                cells = tgt.selectExpr(
-                    "gx", "gy", "fsx",
-                    "CAST(floor(fsy) AS BIGINT) AS syn",
-                ).selectExpr("gx", "gy", f"{sx_e} AS sxn", "syn")
-            else:
-                cells = tgt.selectExpr(
-                    "gx", "gy",
-                    "CAST(floor(fsx) AS BIGINT) AS sxn",
-                    "CAST(floor(fsy) AS BIGINT) AS syn",
-                )
-            cells = cells.where(
+            cells = tgt.selectExpr(
+                "gx", "gy", "fsx", "CAST(floor(fsy) AS BIGINT) AS syn",
+            ).selectExpr(
+                "gx", "gy", "syn",
+                (_stagger_sx_sql(st) if st else "CAST(floor(fsx) AS BIGINT)")
+                + " AS sxn",
+            ).where(
                 f"sxn >= 0 AND sxn < {info['width']} "
                 f"AND syn >= 0 AND syn < {info['height']}"
             )
-        src = _hinted(px.selectExpr(
-            "sx AS sxn", "sy AS syn", *extra_cols, *band_cols
-        ))
-        return cells.join(src, ["sxn", "syn"]).select(
-            "gx", "gy", *extra_cols, *band_cols
-        )
+        return cells.select("gx", "gy", "sxn", "syn").join(
+            src, ["sxn", "syn"]
+        ).select("gx", "gy", *extra_cols, *band_cols)
 
-    if info.get("stagger_x"):
-        raise NotImplementedError(
-            "staggered-grid source with kernel resampling "
-            "(nearest only; re-grid first)"
-        )
-    if info.get("row_ni") is not None:
+    lo, hi = (0, 1) if resampling == "bilinear" else (-1, 2)
+    if row_ni is not None:
         # ragged-row (reduced-grid) kernel resampling: the 2 (bilinear)
         # or 4 (cubic) candidate rows come from the piecewise fsy, and
-        # each row has its OWN x spacing — 360/rn on global circles
-        # (centers at k·360/rn, neighbors wrap), span/(rn−1)
-        # endpoint-inclusive regional rows. The gathered neighbors
-        # carry separable kernel weights wy·wx evaluated in each row's
-        # own index space (x offsets are exact per row; the y kernel
-        # rides the piecewise row coordinate); dropped edge / nodata
-        # contributions renormalize in the shared blend below —
-        # candidate volume is 4×/16× the OUTPUT, same as the affine
-        # path at the matching kernel.
+        # each row has its OWN x spacing (_row_u_sql; neighbors wrap
+        # on global circles). The gathered neighbors carry separable
+        # kernel weights wy·wx evaluated in each row's own index space;
+        # dropped edge / nodata contributions renormalize in the shared
+        # blend below.
         rows_df = spark.createDataFrame(
-            [(j, int(rn)) for j, rn in enumerate(info["row_ni"])],
+            [(j, int(rn)) for j, rn in enumerate(row_ni)],
             "syn bigint, _rn bigint",
         )
-        lon_e = f"(fsx * {a} + {ox})"
-        lf = info.get("lon_first", 0.0)
-        span = info.get("lon_span")
-        u_e = (
-            # no mod-360 wrap (straddling regional grids are gated at
-            # parse; a wrap would nodata the half-spacing west edge —
-            # same convention as the nearest path above)
-            f"(({lon_e}) - {lf}) * (_rn - 1) / {span}D"
-            if span is not None
-            else f"(({lon_e}) - {lf}) * _rn / 360.0D"
-        )
-        klo, khi = (0, 1) if resampling == "bilinear" else (-1, 2)
         rows_c = tgt.selectExpr(
             "gx", "gy", "fsx", "fsy",
             "CAST(floor(fsy - 0.5D) AS BIGINT) AS _j0",
         ).selectExpr(
             "gx", "gy", "fsx", "fsy", "_j0",
-            f"explode(sequence({klo}, {khi})) AS _ky",
+            f"explode(sequence({lo}, {hi})) AS _ky",
         ).selectExpr(
-            "gx", "gy", "fsx", "fsy", "_j0 + _ky AS syn",
+            "gx", "gy", "fsx", "fsy", "_ky", "_j0 + _ky AS syn",
         ).where(f"syn >= 0 AND syn < {info['height']}").selectExpr(
-            "gx", "gy", "fsx", "syn",
+            "gx", "gy", "fsx", "_ky", "syn",
             f"{_kernel_sql('fsy - (syn + 0.5D)', resampling)} AS _wy",
         )
         rows_c = rows_c.join(F.broadcast(rows_df), "syn")
         contrib = rows_c.selectExpr(
-            "gx", "gy", "syn", "_wy", "_rn",
-            f"{u_e} AS _u",
+            "gx", "gy", "_ky", "syn", "_wy", "_rn",
+            f"{_row_u_sql(info)} AS _u",
         ).selectExpr(
-            "gx", "gy", "syn", "_wy", "_rn", "_u",
+            "gx", "gy", "_ky", "syn", "_wy", "_rn", "_u",
             "CAST(floor(_u) AS BIGINT) AS _k0",
-            f"explode(sequence({klo}, {khi})) AS _kx",
+            f"explode(sequence({lo}, {hi})) AS _kx",
         ).selectExpr(
             "gx", "gy", "syn", "_rn",
-            (
-                "pmod(_k0 + _kx, _rn) AS sxn"
-                if span is None and info.get("lon_global")
-                else "_k0 + _kx AS sxn"
-            ),
+            f"(_ky - {lo}) * 4 + (_kx - {lo}) AS _k",
+            "pmod(_k0 + _kx, _rn) AS sxn" if wrap else "_k0 + _kx AS sxn",
             # x weight from the UNWRAPPED neighbor index, so the
             # kernel sees the true signed offset at the seam
             f"_wy * {_kernel_sql('_u - (_k0 + _kx)', resampling)} AS w",
         ).where("sxn >= 0 AND sxn < _rn").drop("_rn")
     else:
-        lo, hi = (0, 1) if resampling == "bilinear" else (-1, 2)
         contrib = (
             tgt.selectExpr(
                 "gx", "gy", "fsx", "fsy",
-                f"CAST(floor(fsx - 0.5D) AS BIGINT) AS ibx",
+                "CAST(floor(fsx - 0.5D) AS BIGINT) AS ibx",
                 f"explode(sequence({lo}, {hi})) AS kx",
             )
             .selectExpr(
-                "gx", "gy", "fsx", "fsy", "ibx + kx AS sxn",
+                "gx", "gy", "fsx", "fsy", "kx", "ibx + kx AS sxn",
                 f"explode(sequence({lo}, {hi})) AS ky",
             )
             .selectExpr(
                 "gx", "gy", "fsx", "fsy", "sxn",
+                f"(kx - {lo}) * 4 + (ky - {lo}) AS _k",
                 "CAST(floor(fsy - 0.5D) AS BIGINT) + ky AS syn",
             )
             .where(
                 f"sxn >= 0 AND sxn < {info['width']} AND syn >= 0 AND syn < {info['height']}"
             )
             .selectExpr(
-                "gx", "gy", "sxn", "syn",
+                "gx", "gy", "sxn", "syn", "_k",
                 f"{_kernel_sql('fsx - (sxn + 0.5D)', resampling)}"
                 f" * {_kernel_sql('fsy - (syn + 0.5D)', resampling)} AS w",
             )
         )
-    src = _hinted(
-        px.selectExpr("sx AS sxn", "sy AS syn", *extra_cols, *band_cols)
+    # the blend sums each pixel's taps in their explode order (_k),
+    # not in shuffle-arrival order: a float SUM across the shuffled
+    # join would round differently with the partition layout
+    taps = (
+        contrib.join(src, ["sxn", "syn"])
+        .groupBy("gx", "gy", *extra_cols)
+        .agg(F.expr(
+            f"array_sort(collect_list(struct(_k, w, {', '.join(band_cols)})))"
+        ).alias("_taps"))
     )
-    joined = contrib.join(src, ["sxn", "syn"])
     nodata = info["nodata"]
     aggs = []
     int_out = np.dtype(info["dtype"]).kind in "iu"
     for bcol in band_cols:
-        if nodata is None:
-            valid = "TRUE"
-        elif nodata != nodata:
-            # NaN samples reach the join as NULL (the decode's Arrow hop)
-            valid = f"{bcol} IS NOT NULL AND NOT isnan({bcol})"
-        else:
-            valid = f"NOT ({bcol} <=> {_sql_double(nodata)})"
-        num = f"SUM(CASE WHEN {valid} THEN w * {bcol} END)"
-        den = f"SUM(CASE WHEN {valid} THEN w END)"
+        # GDAL's masked blend: NaN samples (NULL after the decode's
+        # Arrow hop) and nodata samples are invalid in num AND den
+        valid = f"x.{bcol} IS NOT NULL AND NOT isnan(x.{bcol})"
+        if nodata is not None and nodata == nodata:
+            valid += f" AND NOT (x.{bcol} <=> {_sql_double(nodata)})"
+
+        def total(term: str) -> str:
+            # SUM(CASE WHEN valid THEN term END), replayed in tap order
+            return (
+                f"aggregate(_taps, CAST(NULL AS DOUBLE), (s, x) -> CASE WHEN "
+                f"{valid} THEN coalesce(s, 0.0D) + {term} ELSE s END)"
+            )
+
+        num, den = total(f"x.w * x.{bcol}"), total("x.w")
         blend = f"CASE WHEN {den} <> 0.0D THEN {num} / {den} END"
         if int_out:
             blend = f"round({blend})"  # GDAL rounds for integer bands
         aggs.append(F.expr(blend).alias(bcol))
-    blended = joined.groupBy("gx", "gy", *extra_cols).agg(*aggs)
+    blended = taps.select("gx", "gy", *extra_cols, *aggs)
     # a target pixel every band of which saw only nodata has no source
     # information — drop it (matching the near path's sparse output);
     # partially-valid pixels keep per-band nodata fills
@@ -2332,8 +2322,6 @@ def _resampled_pixels(
             ],
         )
     return blended
-
-
 
 
 def import_tiles(
@@ -2375,34 +2363,32 @@ def import_tiles(
     the covering tiles (:func:`_tile_aligned_bounds`). Each strategy
     choice is made here, once:
 
-    ============================  ===============================  ====
-    input class                   branch                           exch
-    ============================  ===============================  ====
-    north-up 4326/3857 grid       fused separable gather           0
-    (Gaussian rows too),          (:func:`_fused_gather_tiles`);
-    near/bilinear/cubic, raw      decode on the driver when
-    bytes × steps ≤ 100 MB        ``driver_decode``, else
-    (:func:`gather_is_broadcast`) distributed and collected
-    other near ≤ 100 MB           broadcast warp join, aligned     0
-    (projected, rotated,          map-only tile assembly
-    staggered, ragged rows)
-    other bilinear/cubic          broadcast warp join, blend       2
-    ≤ 100 MB                      groupBy, grouped assembly
-    near > 100 MB                 shuffled-hash warp join,         3
-                                  grouped assembly
-    bilinear/cubic > 100 MB       shuffled-hash warp join, blend   4
+    ============================  =================================  ====
+    input class                   branch                             exch
+    ============================  =================================  ====
+    near/bilinear/cubic, raw      gather builder                     0
+    bytes × steps ≤ 100 MB        (:func:`_fused_gather_tiles`):
+    (:func:`gather_is_broadcast`) per-axis index on north-up
+                                  4326/3857 grids, per-pixel
+                                  stream on projected and rotated
+                                  ones; decode on the driver when
+                                  ``driver_decode``, else
+                                  distributed and collected
+    near > 100 MB                 shuffled-hash warp join, grouped   3
+                                  assembly
+    bilinear/cubic > 100 MB       shuffled-hash warp join, blend     4
                                   groupBy, grouped assembly
-    average/mode/max/min/med/     forward-map aggregate groupBy    2
-    q1/q3                         (:func:`aggregate_warp`),
-                                  grouped assembly
-    ============================  ===============================  ====
+    average/mode/max/min/med/     forward-map aggregate groupBy      2
+    q1/q3                         (:func:`aggregate_warp`), grouped
+                                  assembly
+    ============================  =================================  ====
 
     "exch" counts the hash shuffles of the tiles' plan (multi-task
     decode, ``dense`` and stats off); ``mode`` adds one per band. On the
-    join branches ``dense`` adds an anti-join that fills every uncovered
-    tile of the extent with one nodata blob (the fused gather emits
-    those tiles itself). Then ``time_ts`` (``cf_time``) and the
-    per-tile stats (``stats``)."""
+    join and aggregate branches ``dense`` adds an anti-join that fills
+    every uncovered tile of the extent with one nodata blob (the gather
+    builder emits those tiles itself). Then ``time_ts`` (``cf_time``)
+    and the per-tile stats (``stats``)."""
     z = zoom if zoom is not None else _pick_zoom(info, block_size, zoom_strategy)
     # bounds = covering-tile extent at the target zoom (tile-aligned,
     # like the reference's union of mercantile tile bounds); the corner
@@ -2424,6 +2410,11 @@ def import_tiles(
         tile_statistics=stats,
     )
     extra = (time_key,) if time_key else ()
+    if info.get("stagger_x") and resampling in ("bilinear", "cubic"):
+        raise NotImplementedError(
+            "staggered-grid source with kernel resampling "
+            "(nearest only; re-grid first)"
+        )
     if _fused_gather_eligible(info, resampling, n_steps):
         tiles = _fused_gather_tiles(
             spark, decode(driver_decode), info, z, block_size, tile_ext,
@@ -2474,9 +2465,6 @@ def import_tiles(
         tiles = from_pixel_table(
             pixels, meta, compression=compression,
             extra_keys=tuple((k, "double") for k in extra),
-            # map-only assembly (r17): a broadcast near gather over the
-            # block-major target grid delivers tile-contiguous pixels
-            aligned=resampling == "near" and gather_is_broadcast(info, n_steps),
         )
         if dense:
             # the reference warps the full covering grid, so all-nodata

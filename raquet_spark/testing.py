@@ -306,6 +306,7 @@ def write_geokey_tiff(
     nodata: float | None = None,
     values: np.ndarray | None = None,
     rows_per_strip: int | None = None,
+    transform: tuple | None = None,
 ) -> np.ndarray:
     """Write a minimal uncompressed little-endian GeoTIFF of one band —
     the fixture builder for the GeoTIFF importer's CRS and warp paths.
@@ -314,7 +315,9 @@ def write_geokey_tiff(
     header row is added) with ``doubles`` as its GeoDoubleParams.
     ``values`` (height × width) default to a ramp modulo 777;
     ``nodata`` is written as GDAL_NODATA; ``rows_per_strip`` defaults
-    to one strip. Returns the stored array."""
+    to one strip. ``transform`` — a GDAL geotransform ``(ox, a, b, oy,
+    c, d)``, rotation terms allowed — replaces ``origin``/``res`` with
+    a ModelTransformation tag. Returns the stored array."""
     import struct
 
     from raquet_spark.sources.geotiff import _pack_ifd
@@ -341,10 +344,17 @@ def write_geokey_tiff(
         (278, 4, 1, rps),
         (279, 4, len(offs), struct.pack(f"<{len(offs)}I", *counts)),
         (339, 3, 1, {"u": 1, "i": 2, "f": 3}[dt.kind]),
-        (33550, 12, 3, struct.pack("<3d", res, res, 0.0)),
-        (33922, 12, 6, struct.pack("<6d", 0, 0, 0, origin[0], origin[1], 0)),
         (34735, 3, len(gk) // 2, gk),
     ]
+    if transform is None:
+        entries += [
+            (33550, 12, 3, struct.pack("<3d", res, res, 0.0)),
+            (33922, 12, 6, struct.pack("<6d", 0, 0, 0, origin[0], origin[1], 0)),
+        ]
+    else:
+        ox, a, b, oy, c, d = transform
+        m = (a, b, 0, ox, c, d, 0, oy, 0, 0, 0, 0, 0, 0, 0, 1)
+        entries.append((34264, 12, 16, struct.pack("<16d", *m)))
     if doubles:
         entries.append(
             (34736, 12, len(doubles), struct.pack(f"<{len(doubles)}d", *doubles))

@@ -1,11 +1,11 @@
-"""Fused separable gather (r18): the join-free nearest-warp import
-(`tiff_reader._fused_gather_tiles`) must be BYTE-IDENTICAL to the
-`_resampled_pixels(near) → from_pixel_table(aligned=True)` join path it
-replaces for the separable broadcast class — same JVM-floored source
-indices (the index job runs the same expressions in the same engine),
-same verbatim value copies, same fill/astype/encode semantics. Each
-case runs the importer twice: once as shipped (fused) and once with the
-eligibility gate monkeypatched off (join path), then compares every
+"""The gather builder (`tiff_reader._fused_gather_tiles`) must be
+BYTE-IDENTICAL to the warp-join path (`_resampled_pixels` →
+`from_pixel_table`, a shuffled hash join) for every grid class it
+serves — same JVM-computed source coordinates (the builder reads the
+join path's own expressions, per axis or per pixel), same verbatim
+value copies and kernel blends, same fill/astype/encode semantics. Each
+case runs the importer twice: once as shipped (builder) and once with
+the eligibility gate monkeypatched off (join path), then compares every
 row's bytes."""
 
 from __future__ import annotations
@@ -345,37 +345,232 @@ def test_round_half_up_matches_spark_round(spark):
             assert s == n, (v, s, n)
 
 
-def test_fused_gate_excludes_non_separable():
-    """Rotated transforms, staggered rows, ragged rows, projected CRS
-    and SHJ-class sources must keep the join path. near/bilinear/cubic
-    are the separable resamplings (r18 session 4); aggregation kernels
-    keep their own forward path."""
+def test_fused_gate_takes_every_grid_by_size():
+    """The builder takes every near/bilinear/cubic import whose source
+    fits the ~100 MB driver bound, whatever the grid — rotated,
+    staggered, ragged-row and projected included. The reducing kernels
+    keep the forward-map aggregate; past the bound (raw bytes × steps)
+    the shuffled-hash join takes over."""
     base = {
         "transform": (-120.0, 0.01, 0.0, 40.0, 0.0, -0.01),
         "width": 100, "height": 100, "n_bands": 1, "dtype": "int16",
         "epsg": 4326,
     }
-    assert tr._fused_gather_eligible(base, "near")
-    assert tr._fused_gather_eligible(base, "bilinear")
-    assert tr._fused_gather_eligible(base, "cubic")
-    assert not tr._fused_gather_eligible(base, "average")
-    assert not tr._fused_gather_eligible(base, "mode")
-    assert not tr._fused_gather_eligible(
+    grids = [
+        base,
         {**base, "transform": (-120.0, 0.01, 1e-5, 40.0, 0.0, -0.01)},
-        "near",
-    )
-    assert not tr._fused_gather_eligible(
-        {**base, "transform": (-120.0, 0.01, 1e-5, 40.0, 0.0, -0.01)},
-        "bilinear",
-    )
-    assert not tr._fused_gather_eligible({**base, "epsg": 32610}, "near")
-    assert not tr._fused_gather_eligible(
-        {**base, "stagger_x": (0.5, 0.0)}, "near"
-    )
-    assert not tr._fused_gather_eligible(
-        {**base, "row_ni": [10] * 100}, "near"
-    )
-    # past the broadcast class (raw bytes × steps > ~100 MB): join path
+        {**base, "epsg": 32610},
+        {**base, "stagger_x": (0.5, 0.0)},
+        {**base, "row_ni": [10] * 100},
+    ]
+    for info in grids:
+        for resampling in ("near", "bilinear", "cubic"):
+            assert tr._fused_gather_eligible(info, resampling)
+        for resampling in ("average", "mode"):
+            assert not tr._fused_gather_eligible(info, resampling)
     big = {**base, "width": 12000, "height": 12000, "dtype": "float64"}
     assert not tr._fused_gather_eligible(big, "near")
     assert not tr._fused_gather_eligible(base, "near", n_steps=10_000)
+
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear", "cubic"])
+def test_builder_matches_join_path_utm(
+    spark, monkeypatch, standin_tifs, resampling
+):
+    """Projected EPSG:32610 stand-in (nodata voids, partial edge tiles,
+    dense fill): the builder's per-pixel (fsx, fsy) stream runs the
+    Snyder TM forward the join path joins on."""
+    _assert_identical(
+        lambda: tr.geotiff_to_raquet(
+            spark, standin_tifs["utm"], block_size=64, resampling=resampling
+        ),
+        ["block"],
+        monkeypatch,
+    )
+
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+def test_builder_matches_join_path_rotated_affine(
+    spark, tmp_path, monkeypatch, resampling
+):
+    """EPSG:4326 GeoTIFF with rotation terms (b, c ≠ 0) in its
+    ModelTransformation: not separable, so the builder streams the
+    per-pixel coordinates of the join path's affine inverse."""
+    from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
+
+    h, w = 90, 120
+    gy, gx = np.mgrid[0:h, 0:w]
+    vals = ((gx * 7 + gy * 11) % 199 - 50).astype("f8")
+    vals[30:40, 50:70] = -999.0
+    path = str(tmp_path / "rot.tif")
+    write_geokey_tiff(
+        path, w, h, (0.0, 0.0), 0.0, GEOKEYS_4326, dtype="<i2",
+        nodata=-999, values=vals, rows_per_strip=16,
+        transform=(-122.5, 0.001, 0.0004, 37.8, 0.0003, -0.001),
+    )
+    _assert_identical(
+        lambda: tr.geotiff_to_raquet(
+            spark, path, block_size=64, resampling=resampling
+        ),
+        ["block"],
+        monkeypatch,
+    )
+
+
+def test_builder_matches_join_path_staggered_grib2(
+    spark, tmp_path, monkeypatch
+):
+    """Staggered GRIB2 rows (flag-table 3.4 bit 5: odd scan rows shift
+    half a sample east): the per-row-parity offset of the containing
+    cell, near."""
+    from raquet_spark.sources.grib2 import grib2_to_raquet
+    from raquet_spark.testing_grib2 import write_grib2
+
+    nj, ni = 24, 36
+    gy, gx = np.mgrid[0:nj, 0:ni]
+    data = ((gx * 7 + gy * 11) % 199 - 50).astype("f8")
+    path = str(tmp_path / "stagger.grib2")
+    write_grib2(path, [{"data": data, "forecast_time": 0}],
+                lat1=52.0, lon1=4.0, di=0.25, dj=0.25, stagger=0x08)
+    _assert_identical(
+        lambda: grib2_to_raquet(spark, path, block_size=64),
+        ["block"],
+        monkeypatch,
+    )
+
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear", "cubic"])
+def test_builder_matches_join_path_reduced_gaussian(
+    spark, tmp_path, monkeypatch, resampling
+):
+    """Reduced (ragged-row) Gaussian GRIB2 with an in-row bitmap hole:
+    each row's own 360/pl spacing, wrapping on the global circle."""
+    from raquet_spark.sources.grib2 import grib2_to_raquet
+    from raquet_spark.testing_grib2 import write_grib2
+
+    n_par = 8
+    nj = 2 * n_par
+    pl = [20 + 4 * min(j, nj - 1 - j) for j in range(nj)]
+    ni = max(pl)
+    rect = np.full((nj, ni), np.nan)
+    for j in range(nj):
+        for k in range(pl[j]):
+            rect[j, k] = (k * 7 + j * 11) % 199 - 50
+    rect[3, 5] = np.nan
+    path = str(tmp_path / "reduced.grib2")
+    write_grib2(
+        path, [{"data": rect, "forecast_time": 0}],
+        lon1=0.0, di=360.0 / ni,
+        grid={"type": "gauss_reduced", "n": n_par, "pl": pl},
+    )
+    _assert_identical(
+        lambda: grib2_to_raquet(spark, path, block_size=64, zoom=3,
+                                resampling=resampling),
+        ["block"],
+        monkeypatch,
+    )
+
+
+def test_builder_matches_join_path_lambert_2step(
+    spark, tmp_path, monkeypatch
+):
+    """2-step Lambert-conformal GRIB2 (template 3.30), near: a
+    projected grid with a time key through the per-pixel stream."""
+    from raquet_spark.sources.grib2 import grib2_to_raquet
+    from raquet_spark.testing_grib2 import write_grib2
+
+    nj, ni = 20, 28
+    gy, gx = np.mgrid[0:nj, 0:ni]
+    fields = [
+        {"data": ((gx * 7 + gy * 11 + t * 13) % 199 - 50).astype("f8"),
+         "forecast_time": t * 3}
+        for t in range(2)
+    ]
+    path = str(tmp_path / "lambert.grib2")
+    write_grib2(
+        path, fields,
+        grid={"type": "lambert", "la1": 35.0, "lo1": -100.0, "dx": 3000,
+              "dy": 3000, "lad": 38.5, "lov": -97.5, "latin1": 38.5,
+              "latin2": 38.5, "shape": 6},
+    )
+    _assert_identical(
+        lambda: grib2_to_raquet(spark, path, block_size=64),
+        ["block", "time_cf"],
+        monkeypatch,
+    )
+
+
+def test_kernel_nan_samples_renormalize(spark, tmp_path, monkeypatch):
+    """A float source WITHOUT nodata holding NaN samples: GDAL treats a
+    NaN as invalid in the blend, so both paths drop it from num AND den
+    and renormalize — no NaN output pixel, the join path equal to the
+    builder, and one pixel next to the patch equal to a hand-computed
+    renormalized bilinear blend."""
+    import math
+
+    from raquet_spark.functions.bands import decode_block
+    from raquet_spark.functions.quadbin import py_cell_to_tile
+    from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
+
+    h, w, res = 48, 64, 0.001
+    ox, oy = -123.0, 38.0
+    gy, gx = np.mgrid[0:h, 0:w]
+    vals = (gx * 3 + gy * 5).astype("f8")
+    vals[20:24, 30:35] = np.nan
+    path = str(tmp_path / "nan.tif")
+    write_geokey_tiff(path, w, h, (ox, oy), res, GEOKEYS_4326,
+                      dtype="<f4", values=vals)
+    mk = lambda: tr.geotiff_to_raquet(  # noqa: E731
+        spark, path, block_size=64, resampling="bilinear", stats=False
+    )
+    _assert_identical(mk, ["block"], monkeypatch)
+
+    tiles, meta = mk()
+    z = meta["tiling"]["max_zoom"]
+    world = float((1 << z) * 64)
+    shift = math.pi * 6378137.0
+    src = vals.astype("f4").astype("f8")
+    checked = 0
+    for row in tiles.collect():
+        tile = decode_block(row["band_1"], "float32").reshape(64, 64)
+        assert not np.isnan(tile).any()
+        tx, ty, _ = py_cell_to_tile(row["block"])
+        for py, px_ in np.argwhere(tile != 0):
+            gxp, gyp = tx * 64 + px_, ty * 64 + py
+            lon = ((gxp + 0.5) / world * 2 * shift - shift) / shift * 180.0
+            my = shift - (gyp + 0.5) / world * 2 * shift
+            lat = math.degrees(2 * math.atan(math.exp(my / 6378137.0)) - math.pi / 2)
+            fsx, fsy = (lon - ox) / res, (oy - lat) / res
+            x0, y0 = math.floor(fsx - 0.5), math.floor(fsy - 0.5)
+            if not (0 <= x0 < w - 1 and 0 <= y0 < h - 1):
+                continue
+            nb = src[y0:y0 + 2, x0:x0 + 2]
+            if not (np.isnan(nb).any() and not np.isnan(nb).all()):
+                continue
+            wy = 1.0 - np.abs(fsy - (np.arange(y0, y0 + 2) + 0.5))
+            wx = 1.0 - np.abs(fsx - (np.arange(x0, x0 + 2) + 0.5))
+            wt = wy[:, None] * wx[None, :]
+            ok = ~np.isnan(nb)
+            want = (wt[ok] * nb[ok]).sum() / wt[ok].sum()
+            assert tile[py, px_] == pytest.approx(want, rel=1e-5)
+            checked += 1
+            break
+    assert checked
+
+
+def test_builder_stream_rejects_non_contiguous_tiles(
+    spark, monkeypatch, standin_tifs
+):
+    """The per-pixel stream must arrive tile by tile: a stream whose
+    tiles are split or interleaved (here: a round-robin repartition of
+    the target grid) fails the build with ValueError, never a half
+    tile."""
+    real = tr._target_fs
+    monkeypatch.setattr(
+        tr, "_target_fs", lambda *a, **k: real(*a, **k).repartition(3)
+    )
+    tiles, _ = tr.geotiff_to_raquet(
+        spark, standin_tifs["utm"], block_size=64, stats=False
+    )
+    with pytest.raises(Exception, match="not tile-contiguous"):
+        tiles.collect()

@@ -281,13 +281,11 @@ def test_halo_level_single_shuffle(spark):
 
 @pytest.mark.parametrize("src", ["standin", "reference"])
 def test_geotiff_import_shuffle_budget(spark, standin_tifs, src):
-    """The GeoTIFF import (target-driven dense nearest for
-    4326/3857 sources) is MAP-ONLY when the source side broadcasts (as
-    here): the block-major target grid keeps pixels tile-contiguous
-    through the broadcast gather, so the tile assembly runs aligned
-    with NO exchange (r17; was 1 — the tiling groupBy). At scale the
-    gather degrades to a shuffled join and the assembly to the grouped
-    path: at most 3 exchanges. Projection math and segment decode stay
+    """The GeoTIFF import of a ≤100 MB source is MAP-ONLY: the gather
+    builder makes every tile in one mapInPandas, with NO exchange, on
+    4326 (per-axis index) and projected (per-pixel stream) grids alike.
+    Past the bound the shuffled-hash join and the grouped assembly take
+    over (at most 3 exchanges). Projection math and segment decode stay
     map-side; never a nested-loop join."""
     import os
 
@@ -307,8 +305,8 @@ def test_geotiff_import_shuffle_budget(spark, standin_tifs, src):
     assert no_nested_loops(tiles)
     assert count_exchanges(tiles) == 0
 
-    # projected CRS route through the Snyder forward projections into
-    # the same target-driven join — same shuffle budget, no BNLJ
+    # projected CRS stream the Snyder forward projections into the
+    # same builder — same shuffle budget, no join
     nlcd = "/root/reference/tests/Annual_NLCD_LndCov_2023_CU_C1V0.tif"
     if src == "standin":
         nlcd = standin_tifs["utm"]
@@ -361,11 +359,12 @@ def test_bilinear_import_fused_exchange_free(spark, standin_tifs, src):
 def test_bilinear_import_join_path_three_shuffles_no_bnlj(
     spark, monkeypatch, standin_tifs, src
 ):
-    """The JOIN-path resampled import (what non-separable / SHJ-class
-    sources still run) is exactly three exchanges — the (sx, sy)
-    neighborhood gather join, the blend groupBy(target pixel), and the
-    tiling groupBy(block) — with NO nested-loop join anywhere (the
-    4x-contribution explode is map-side) and no Python row UDFs."""
+    """The JOIN-path resampled import (what sources over ~100 MB run) is
+    a shuffled hash join: at most four exchanges — the source and the
+    neighborhood side of the (sx, sy) gather join, the blend
+    groupBy(target pixel), and the tiling groupBy(block) — with NO
+    nested-loop join anywhere (the 4x-contribution explode is
+    map-side), no Python row UDFs, and no broadcast of the source."""
     import os
 
     import pytest as _pytest
@@ -389,20 +388,17 @@ def test_bilinear_import_join_path_three_shuffles_no_bnlj(
     )
     assert no_nested_loops(tiles)
     assert no_python_udfs(tiles)
-    assert count_exchanges(tiles) <= 3
-    # the ~25 MB n37 source fits the explicit warp broadcast bound —
-    # the gather must be a BroadcastHashJoin regardless of the session
-    # autoBroadcastJoinThreshold (VERDICT r11 #2)
+    assert count_exchanges(tiles) <= 4
     from raquet_spark.plans import has_broadcast_join
 
-    assert has_broadcast_join(tiles)
+    assert not has_broadcast_join(tiles)
 
 
 def test_netcdf_import_two_shuffles(spark, tmp_path):
-    """NetCDF conversion keeps the GeoTIFF import's plan shape — with
-    a broadcast-sized source the near import is MAP-ONLY (r17: aligned
-    tile assembly, no exchange) and ALL time steps ride the same
-    broadcast gather (time_cf is a join output, not a driver loop)."""
+    """NetCDF conversion keeps the GeoTIFF import's plan shape — a
+    ≤100 MB source's near import is MAP-ONLY (the gather builder, no
+    exchange) and ALL time steps ride the same build tasks (time_cf is
+    a builder output, not a driver loop)."""
     import numpy as np
 
     from raquet_spark.plans.inspect import count_exchanges, no_nested_loops
@@ -602,73 +598,96 @@ def test_dsir_bucket_join_broadcasts(spark, qs):
     assert "BroadcastHashJoin [bucket" in plan
 
 
-def test_import_warp_gather_broadcasts_by_source_size(spark):
-    """VERDICT r11 #2: the warp gather join must not inherit the
-    session autoBroadcastJoinThreshold (the 10 MB TPC-H tuning
-    silently de-broadcast it) — the importer knows the exact source
-    size at plan time and passes F.broadcast(src) under ~100 MB,
-    keeping the shuffle path above it."""
-    from raquet_spark.sources.tiff_reader import _resampled_pixels
+def _import_strategy(spark, monkeypatch, width, height, n_steps=1):
+    """``import_tiles`` over a ``width`` × ``height`` float64 grid with
+    a 16-row decode (bilinear, zoom 2): returns whether the gather
+    builder took it, and the join-path tiles (None for the builder)."""
+    import raquet_spark.sources.tiff_reader as tr
+    from raquet_spark.core.metadata import BandMeta
 
-    def plan_for(width, height):
-        px = spark.range(16).selectExpr(
-            "CAST(id % 4 AS BIGINT) AS sx",
-            "CAST(id DIV 4 AS BIGINT) AS sy",
-            "CAST(id AS DOUBLE) AS band_1",
-        )
-        info = {
-            "transform": (0.0, 10.0, 0.0, 0.0, 0.0, -10.0),
-            "epsg": 3857, "n_bands": 1, "width": width,
-            "height": height, "nodata": None, "dtype": "float64",
-        }
-        df = _resampled_pixels(
-            spark, px, info, z=2, block_size=16, resampling="bilinear",
-            tile_ext=(0, 0, 0, 0),
-        )
-        # the hint is the contract: the physical join of this tiny
-        # fixture broadcasts either way via the session threshold
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    small = plan_for(4, 4)  # 4x4 source: always broadcast
-    assert "strategy=broadcast" in small
-    # an ~800 MB source must NOT be hash-built on the driver — and
-    # Catalyst's own estimate of the decode output is garbage-small,
-    # so the shuffle path must be pinned, not merely un-hinted
-    big = plan_for(20_000, 20_000 // 4)
-    assert "strategy=broadcast" not in big
-    assert "strategy=shuffle_hash" in big
+    built = []
+    monkeypatch.setattr(
+        tr, "_fused_gather_tiles",
+        lambda *a, **k: built.append(1) or spark.range(1),
+    )
+    time_col = ("CAST(id % 2 AS DOUBLE) AS time_cf",) if n_steps > 1 else ()
+    px = spark.range(16).selectExpr(
+        "CAST(id % 4 AS BIGINT) AS sx",
+        "CAST(id DIV 4 AS BIGINT) AS sy",
+        *time_col,
+        "CAST(id AS DOUBLE) AS band_1",
+    )
+    info = {
+        "transform": (0.0, 10.0, 0.0, 0.0, 0.0, -10.0),
+        "epsg": 3857, "n_bands": 1, "width": width, "height": height,
+        "nodata": None, "dtype": "float64",
+    }
+    tiles, _ = tr.import_tiles(
+        spark, info, [BandMeta(name="band_1")], lambda local: px,
+        driver_decode=False, zoom=2, block_size=16, compression=None,
+        stats=False, resampling="bilinear",
+        time_key="time_cf" if n_steps > 1 else None, n_steps=n_steps,
+    )
+    return bool(built), None if built else tiles
 
 
-def test_import_warp_gather_sizes_by_time_steps(spark):
+def test_import_warp_gather_broadcasts_by_source_size(spark, monkeypatch):
+    """VERDICT r11 #2: the warp strategy must not inherit the session
+    autoBroadcastJoinThreshold — the importer knows the exact source
+    size at plan time. Under ~100 MB the gather builder takes the
+    import (one collected copy, no join); above it the gather is a
+    PINNED shuffled hash join (Catalyst's own estimate of the decode
+    output is garbage-small, so un-hinting would broadcast it) and the
+    source is never hash-built on the driver."""
+    from raquet_spark.plans import has_broadcast_join
+
+    built, _ = _import_strategy(spark, monkeypatch, 4, 4)
+    assert built
+    built, tiles = _import_strategy(spark, monkeypatch, 20_000, 20_000 // 4)
+    assert not built
+    plan = tiles._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=shuffle_hash" in plan
+    assert "strategy=broadcast" not in plan
+    assert not has_broadcast_join(tiles)
+
+
+def test_import_warp_gather_sizes_by_time_steps(spark, monkeypatch):
     """ADVICE r12: the px table carries one full grid PER TIME STEP
     (GRIB/NetCDF time_cf), so a per-step-small grid with many steps
-    must count steps in the broadcast decision — an 8 MB/step global
+    must count steps in the strategy decision — an 8 MB/step global
     grid with 100+ forecast steps is ~1 GB, not 8 MB."""
-    from raquet_spark.sources.tiff_reader import _resampled_pixels
+    # ~8 MB per step (0.25-deg global)
+    built, _ = _import_strategy(spark, monkeypatch, 1440, 721, n_steps=3)
+    assert built                                     # ~25 MB total
+    built, tiles = _import_strategy(spark, monkeypatch, 1440, 721, n_steps=120)
+    assert not built                                 # ~1 GB total
+    plan = tiles._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=shuffle_hash" in plan
+    assert "strategy=broadcast" not in plan
 
-    def plan_for(n_steps):
-        px = spark.range(16).selectExpr(
-            "CAST(id % 4 AS BIGINT) AS sx",
-            "CAST(id DIV 4 AS BIGINT) AS sy",
-            "CAST(0.0 AS DOUBLE) AS time_cf",
-            "CAST(id AS DOUBLE) AS band_1",
-        )
-        info = {
-            "transform": (0.0, 10.0, 0.0, 0.0, 0.0, -10.0),
-            "epsg": 3857, "n_bands": 1, "width": 1440,
-            "height": 721, "nodata": None, "dtype": "float64",
-        }  # ~8 MB per step (0.25-deg global)
-        df = _resampled_pixels(
-            spark, px, info, z=2, block_size=16, resampling="bilinear",
-            tile_ext=(0, 0, 0, 0), extra_cols=("time_cf",),
-            n_steps=n_steps,
-        )
-        return df._jdf.queryExecution().optimizedPlan().toString()
 
-    assert "strategy=broadcast" in plan_for(3)       # ~25 MB total
-    many = plan_for(120)                             # ~1 GB total
-    assert "strategy=broadcast" not in many
-    assert "strategy=shuffle_hash" in many
+def test_projected_import_compiles_without_codegen_fallback(
+    spark, standin_tifs
+):
+    """The projected (EPSG:32610) stand-in import — near, dense, stats —
+    runs with whole-stage codegen fallback OFF: the builder's per-pixel
+    index stage (range → explode → Snyder TM forward → fsx/fsy →
+    mapInPandas) compiles. The warp-join plan it replaced grew its
+    Morton-key Project past janino's 64 KB method limit and ran only
+    through the interpreted fallback."""
+    from raquet_spark.sources.tiff_reader import geotiff_to_raquet
+
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        tiles, _ = geotiff_to_raquet(spark, standin_tifs["utm"])
+        assert len(tiles.collect()) > 0
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_ann_lsh_oversized_list_broadcast_guard(spark, monkeypatch):

@@ -257,67 +257,6 @@ def test_pixel_table_tiling_roundtrip(spark):
     assert got == want
 
 
-def test_aligned_tiling_matches_grouped(
-    spark, tmp_path, monkeypatch, standin_tifs
-):
-    """The r17 aligned (exchange-free) tile assembly is byte-identical
-    to the grouped path on the imports that take it: a projected
-    GeoTIFF (partial edge tiles, dense fill) and a time-stepped NetCDF
-    held off the fused gather (interleaved time_cf rows, the
-    contiguity contract). A spy asserts the aligned assembly really ran
-    — a 4326 source on the fused gather never reaches
-    ``from_pixel_table``."""
-    import numpy as np
-
-    import raquet_spark.operators.tiling as tiling_mod
-    import raquet_spark.sources.tiff_reader as tr
-    from raquet_spark.sources.netcdf import netcdf_to_raquet
-    from raquet_spark.testing import write_netcdf_classic
-
-    nlat, nlon, nt = 40, 60, 2
-    gy, gx = np.mgrid[0:nlat, 0:nlon]
-    data = np.stack(
-        [((gx * 7 + gy * 11 + t * 13) % 199 - 50) for t in range(nt)]
-    ).astype("<i2")
-    path = str(tmp_path / "al.nc")
-    write_netcdf_classic(
-        path, 37.9875 - 0.025 * np.arange(nlat),
-        -122.9875 + 0.025 * np.arange(nlon), data,
-        times=np.arange(nt, dtype="f8"), nc_type=3,
-        scale_factor=0.5, add_offset=100.0, fill_value=-999,
-    )
-    monkeypatch.setattr(tr, "_fused_gather_eligible", lambda *a, **k: False)
-    orig = tiling_mod.from_pixel_table
-    cases = [
-        (lambda: tr.geotiff_to_raquet(
-            spark, standin_tifs["utm"], block_size=64, stats=False
-        ), ["block"]),
-        (lambda: netcdf_to_raquet(spark, path, block_size=64, stats=False),
-         ["block", "time_cf"]),
-    ]
-    for mk, keys in cases:
-        seen = []
-
-        def spy(pixels, metadata, aligned=False, **kw):
-            seen.append(aligned)
-            return orig(pixels, metadata, aligned=aligned, **kw)
-
-        def grouped(pixels, metadata, aligned=False, **kw):
-            return orig(pixels, metadata, aligned=False, **kw)
-
-        monkeypatch.setattr(tiling_mod, "from_pixel_table", spy)
-        tiles_aligned, _ = mk()
-        assert seen == [True]
-        monkeypatch.setattr(tiling_mod, "from_pixel_table", grouped)
-        tiles_grouped, _ = mk()
-        a = {tuple(r[k] for k in keys): bytes(r["band_1"])
-             for r in tiles_aligned.collect()}
-        b = {tuple(r[k] for k in keys): bytes(r["band_1"])
-             for r in tiles_grouped.collect()}
-        assert a == b
-        assert len(a) > 0
-
-
 def test_downsample_kernels_nodata_masked():
     import numpy as np
 
