@@ -1,21 +1,27 @@
 """Point queries: pixel value at lon/lat (reference ST_RasterValue
 semantics, format-specs/raquet.md:304-309).
 
-Spark-first: the lookup is a *join*, not a per-point loop — a DataFrame
-of points is mapped to its containing block cell (pure quadbin Column
-math, usable for millions of points), equi-joined against the tile table
-on ``block`` (broadcast when the point side is small), and only the
-matched tiles are decoded. Zoom clamping follows the spec: requests
-outside [min_zoom, max_zoom] clamp to the nearest available level.
+Spark-first: the lookup is a *co-group*, not a per-point loop — a
+DataFrame of points is mapped to its containing block cell and in-tile
+pixel offset (pure quadbin Column math, usable for millions of points),
+then points and the tiles of the lookup zoom are co-grouped on
+``block``. Each group decodes its tile once and gathers every point's
+value with one numpy fancy index, so a tile crosses into Python once
+per query however many points hit it, and no blob is broadcast or
+repeated per point. Arrow carries the point columns through untouched,
+so their types round-trip exactly. Zoom clamping follows the spec:
+requests outside [min_zoom, max_zoom] clamp to the nearest available
+level.
 """
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from raquet_spark.core.metadata import parse_nodata
 from raquet_spark.functions import quadbin as qb
@@ -32,7 +38,9 @@ def raster_value(
     band: str | None = None,
 ) -> DataFrame:
     """Append ``value`` (double) for each point row; NULL when no tile
-    covers the point (sparse dataset) or the pixel is nodata."""
+    covers the point (sparse dataset), lon or lat is NULL, or the pixel
+    is nodata or NaN. A block with k rows (time steps) yields k rows per
+    point, one per step."""
     from raquet_spark.session import ensure_package_shipped
 
     ensure_package_shipped(tiles.sparkSession)
@@ -48,50 +56,52 @@ def raster_value(
     # pixel zoom relative to the block grid: 2^z tiles × bw pixels each
     pts = points.withColumn("_pt_block", F.expr(qb.point_to_cell_sql(lon_col, lat_col, z, "spark")))
 
-    # global pixel coordinates (floor of mercator fraction × world pixels)
+    # global pixel coordinates (floor of mercator fraction × world
+    # pixels), reduced to the row-major offset inside the tile
     m = f"CAST({1 << z} AS DOUBLE)"
     clat = f"greatest(least(CAST({lat_col} AS DOUBLE), {qb.MAX_LAT}), {-qb.MAX_LAT})"
     sinlat = f"sin({clat} * pi() / 180.0)"
     xf = f"(CAST({lon_col} AS DOUBLE) / 360.0 + 0.5)"
     yf = f"(0.5 - 0.25 * ln((1.0 + {sinlat}) / (1.0 - {sinlat})) / pi())"
-    pts = pts.withColumn(
-        "_px", F.expr(f"CAST(floor({xf} * {m} * {bw}) AS BIGINT) % {bw}")
-    ).withColumn("_py", F.expr(f"CAST(floor({yf} * {m} * {bh}) AS BIGINT) % {bh}"))
+    px = f"(CAST(floor({xf} * {m} * {bw}) AS BIGINT) % {bw})"
+    py = f"(CAST(floor({yf} * {m} * {bh}) AS BIGINT) % {bh})"
+    pts = pts.withColumn("_pt_off", F.expr(f"{py} * {bw} + {px}"))
 
     lv = (
         tiles.where(F.expr(qb.cell_to_zoom_sql("block", "spark")) == z)
         .select(F.col("block").alias("_pt_block"), F.col(bname).alias("_blob"))
     )
-    joined = pts.join(lv, "_pt_block", "left")
+    # a caller's own ``value`` column is replaced, as by withColumn
+    out_cols = [c for c in points.columns if c != "value"]
+    schema = StructType(
+        [points.schema[c] for c in out_cols] + [StructField("value", DoubleType())]
+    )
 
-    @F.pandas_udf("double")
-    def pixel_at(
-        block: pd.Series, blob: pd.Series, px: pd.Series, py: pd.Series
-    ) -> pd.Series:
-        # decode each tile ONCE per Arrow batch (cache keyed by block id):
-        # join output is clustered by the join key, so N points in one
-        # tile cost one decode + N gathers, not N decodes. At 100 TB,
-        # sampling millions of points against the same tiles stays
-        # decode-bound by distinct tiles, not by points.
-        cache: dict[int, object] = {}
+    def lookup(pt: pa.Table, tl: pa.Table) -> pa.Table:
+        # one group = one block: its points and its k tile rows. The
+        # points come back once per tile row (k = 0: once, value NULL)
+        rows = pt.select(out_cols)
+        if not pt.num_rows:
+            return rows.append_column("value", pa.nulls(0, pa.float64()))
+        off = pt.column("_pt_off")
+        missing = off.is_null().to_numpy(zero_copy_only=False)
+        idx = pc.fill_null(off, 0).to_numpy()
         out = []
-        for blk, b, x, y in zip(block, blob, px, py):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            arr = cache.get(blk)
-            if arr is None:
-                arr = decode_block(b, btype)
-                cache[blk] = arr
-            v = float(arr[int(y) * bw + int(x)])
-            if nodata is not None and (v == nodata or (math.isnan(v) and math.isnan(nodata if isinstance(nodata, float) else math.nan))):
-                out.append(None)
-            elif math.isnan(v):
-                out.append(None)
+        for blob in tl.column("_blob").to_pylist() or [None]:
+            if blob is None:
+                vals = pa.nulls(pt.num_rows, pa.float64())
             else:
-                out.append(v)
-        return pd.Series(out, dtype="float64")
+                v = decode_block(blob, btype)[idx].astype("f8")
+                bad = missing | np.isnan(v)
+                if nodata is not None:
+                    bad |= v == nodata
+                vals = pa.array(v, mask=bad)
+            out.append(rows.append_column("value", vals))
+        return pa.concat_tables(out)
 
-    return joined.withColumn(
-        "value", pixel_at("_pt_block", "_blob", "_px", "_py")
-    ).drop("_pt_block", "_px", "_py", "_blob")
+    return (
+        pts.groupBy("_pt_block")
+        .cogroup(lv.groupBy("_pt_block"))
+        .applyInArrow(lookup, schema=schema)
+    )
+

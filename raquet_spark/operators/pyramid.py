@@ -446,14 +446,18 @@ def build_pyramid(
     ``levels_per_pass`` at a time by :func:`build_levels_blocked` — one
     shuffle per pass instead of per level, with per-group memory
     bounded by 4^levels_per_pass child tiles (default 3 ⇒ ≤64 tiles,
-    ≤64 MB mosaic for 256px float64 bands). Each pass's coarsest level
-    feeds the next pass and appears in the result union, so it is
-    lineage-truncated via ``localCheckpoint(False)`` — computed once,
-    not once per duplicated subtree. (On a real cluster the equivalent
-    lever is writing each level out as it is built, which
-    `write_raquet` of the returned union preserves.)
+    ≤64 MB mosaic for 256px float64 bands). The native tiles feed the
+    first pass and appear in the result union, and so does each pass's
+    coarsest level for the next pass, so each is lineage-truncated via
+    ``localCheckpoint(False)`` — computed once, not once per duplicated
+    subtree: an import's decode, gather and stats run once per pyramid,
+    not once for the overviews and again for the union. (On a real
+    cluster the equivalent lever is writing each level out as it is
+    built, which `write_raquet` of the returned union preserves.)
     """
     native_zoom = metadata["tiling"]["max_zoom"]
+    if native_zoom > min_zoom:
+        df = df.localCheckpoint(False)
     levels = [df]
     current = df
     z = native_zoom

@@ -5,12 +5,18 @@ Semantics mirror the reference numpy stats
 (/root/reference/raquet/raster2raquet.py:525-574): population stddev,
 NaN/Inf and nodata excluded; all-nodata tiles get NULL stats.
 
-One Arrow-batched ``mapInPandas`` pass decodes each tile once and emits
-all six stats per band; everything downstream (region stats, global
-metadata stats) is pure columnar aggregation with no pixel decode —
-that's the spec's whole point for warehouse engines, and at 100 TB the
-difference between scanning binary blobs and scanning six DOUBLE columns
-is the difference between hours and seconds.
+The importers' gather builder (``tiff_reader._fused_gather_tiles``)
+computes the stats itself, on each tile it has in hand before encoding
+it, with :func:`tile_stats_arrays` and :func:`stats_columns`.
+:func:`with_tile_stats` serves everything else — the shuffled-hash
+join and forward-map aggregate import branches, and re-stats after a
+pyramid or retile: one Arrow-batched ``mapInPandas`` pass decodes each
+tile once and emits all six stats per band. Everything downstream
+(region stats, global metadata stats) is pure columnar aggregation
+with no pixel decode — that's the spec's whole point for warehouse
+engines, and at 100 TB the difference between scanning binary blobs
+and scanning six DOUBLE columns is the difference between hours and
+seconds.
 """
 
 from __future__ import annotations
@@ -50,6 +56,27 @@ def tile_stats_arrays(values: np.ndarray, nodata) -> dict[str, float] | None:
     }
 
 
+def stats_columns(name: str, stats: list[dict | None]) -> dict[str, pd.Series]:
+    """The ``{name}_{stat}`` columns of one band from per-tile
+    :func:`tile_stats_arrays` results (None: NULL stats, count too)."""
+    return {
+        f"{name}_{s}": pd.Series(
+            [None if st is None else st[s] for st in stats],
+            dtype="Int64" if s == "count" else "f8",
+        )
+        for s in TILE_STAT_NAMES
+    }
+
+
+def stats_schema(names: list[str]) -> str:
+    """DDL of the ``{name}_{stat}`` columns, band-major."""
+    return ", ".join(
+        f"{name}_{s} {'bigint' if s == 'count' else 'double'}"
+        for name in names
+        for s in TILE_STAT_NAMES
+    )
+
+
 def with_tile_stats(df: DataFrame, metadata: dict) -> DataFrame:
     """Append ``{band}_{stat}`` columns for every band (sequential layout)."""
     from raquet_spark.session import ensure_package_shipped
@@ -62,23 +89,15 @@ def with_tile_stats(df: DataFrame, metadata: dict) -> DataFrame:
         for pdf in batches:
             out = pdf.copy()
             for name, btype, nodata in bands:
-                cols: dict[str, list] = {s: [] for s in TILE_STAT_NAMES}
-                for blob in pdf[name]:
-                    st = None
-                    if blob is not None:
-                        st = tile_stats_arrays(decode_block(blob, btype), nodata)
-                    for s in TILE_STAT_NAMES:
-                        cols[s].append(None if st is None else st[s])
-                for s in TILE_STAT_NAMES:
-                    out[f"{name}_{s}"] = pd.Series(cols[s], dtype="Int64" if s == "count" else "f8")
+                out = out.assign(**stats_columns(name, [
+                    None if blob is None
+                    else tile_stats_arrays(decode_block(blob, btype), nodata)
+                    for blob in pdf[name]
+                ]))
             yield out
 
-    stat_fields = ", ".join(
-        f"{name}_{s} {'bigint' if s == 'count' else 'double'}"
-        for name, _, _ in bands
-        for s in TILE_STAT_NAMES
-    )
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in in_schema.fields)
+    stat_fields = stats_schema([name for name, _, _ in bands])
     return df.mapInPandas(compute, schema=f"{schema}, {stat_fields}")
 
 

@@ -3760,9 +3760,9 @@ def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFra
         # materialize the (sources x 2)-row aggregate HERE so the
         # cache can be released before returning (the driver
         # collects lazily, after this function exits) — no cached
-        # blocks leak into the rest of the session
-        rows = out.collect()
-        return spark.createDataFrame(rows, schema=out.schema)
+        # blocks leak into the rest of the session, and no rows
+        # round-trip through the driver
+        return out.localCheckpoint(eager=True)
     finally:
         base.unpersist()
 

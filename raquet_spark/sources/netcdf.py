@@ -25,6 +25,7 @@ variables"), optional unlimited time dimension, ``scale_factor``/
 
 from __future__ import annotations
 
+import math
 import struct
 from collections.abc import Iterator
 
@@ -56,37 +57,73 @@ _NC_ATTRIBUTE = 0x0C
 
 
 class _Reader:
-    def __init__(self, buf: bytes, wide: bool = False):
+    """Cursor over the classic header. Every read is bounds-checked:
+    truncation, an unknown type, a bad tag or a count that cannot fit
+    in the bytes left raises ``ValueError``, never ``struct.error`` or
+    a silent short slice."""
+
+    def __init__(self, buf, wide: bool = False):
         self.buf = buf
         self.pos = 0
         self.wide = wide  # CDF-5: sizes/counts/offsets are 64-bit
 
+    def take(self, n: int) -> bytes:
+        raw = self.buf[self.pos : self.pos + n]
+        if len(raw) < n:
+            raise ValueError(
+                f"NetCDF header truncated: {n} bytes wanted at offset "
+                f"{self.pos}, {len(raw)} left"
+            )
+        self.pos += n
+        return raw
+
     def u32(self) -> int:
-        (v,) = struct.unpack_from(">I", self.buf, self.pos)
-        self.pos += 4
-        return v
+        return struct.unpack(">I", self.take(4))[0]
 
     def u64(self) -> int:
-        (v,) = struct.unpack_from(">Q", self.buf, self.pos)
-        self.pos += 8
-        return v
+        return struct.unpack(">Q", self.take(8))[0]
 
     def nn(self) -> int:
         """NON_NEG per the classic spec: 32-bit in CDF-1/2, 64-bit in
         CDF-5 (pnetcdf 64-bit data format)."""
         return self.u64() if self.wide else self.u32()
 
+    def count(self, what: str, min_item: int) -> int:
+        """A list length whose items take at least ``min_item`` bytes
+        each: more than the remaining bytes can hold is a corrupt
+        header, not a loop to run."""
+        n = self.nn()
+        if n * min_item > len(self.buf) - self.pos:
+            raise ValueError(
+                f"NetCDF header: {n} {what} cannot fit in the "
+                f"{len(self.buf) - self.pos} bytes left"
+            )
+        return n
+
+    def tag(self, want: int, what: str) -> int:
+        """A list's tag: ABSENT or ``want``; anything else is corrupt."""
+        tag = self.u32()
+        if tag not in (_ABSENT, want):
+            raise ValueError(f"NetCDF header: bad {what} tag {tag:#x}")
+        return tag
+
     def name(self) -> str:
         n = self.nn()
-        s = self.buf[self.pos : self.pos + n].decode("utf-8")
-        self.pos += (n + 3) // 4 * 4  # names pad to 4-byte boundary
+        s = self.take(n).decode("utf-8")
+        self.take((-n) % 4)  # names pad to 4-byte boundary
         return s
+
+    def nc_type(self) -> int:
+        t = self.u32()
+        if t not in _NC_DTYPES:
+            raise ValueError(f"NetCDF header: unknown nc_type {t}")
+        return t
 
     def attr_values(self, nc_type: int, n: int):
         dt = np.dtype(_NC_DTYPES[nc_type])
         nbytes = dt.itemsize * n
-        raw = self.buf[self.pos : self.pos + nbytes]
-        self.pos += (nbytes + 3) // 4 * 4
+        raw = self.take(nbytes)
+        self.take((-nbytes) % 4)
         if nc_type == 2:
             return raw.decode("utf-8", errors="replace")
         vals = np.frombuffer(raw, dtype=dt)
@@ -94,34 +131,48 @@ class _Reader:
 
 
 def _attr_list(r: _Reader) -> dict:
-    tag = r.u32()
-    count = r.nn()
+    tag = r.tag(_NC_ATTRIBUTE, "attribute")
+    # name length, nc_type and value count: 12 bytes at least each
+    count = r.count("attributes", 12)
     if tag == _ABSENT:
         return {}
-    assert tag == _NC_ATTRIBUTE, f"bad attribute tag {tag}"
     out = {}
     for _ in range(count):
         name = r.name()
-        nc_type = r.u32()
+        nc_type = r.nc_type()
         n = r.nn()
         out[name] = r.attr_values(nc_type, n)
     return out
 
 
-def read_netcdf_structure(path: str, header_bytes: int = 1 << 20) -> dict:
-    """Parse the NetCDF header — classic (CDF-1/CDF-2) inline, or
+def read_netcdf_structure(path: str) -> dict:
+    """Parse the NetCDF header — classic (CDF-1/CDF-2/CDF-5) inline, or
     NetCDF-4 (HDF5 container, magic ``\\x89HDF``) via sources/hdf5.py —
     into one structure-dict shape: dimensions, global attributes,
     variables (dims, shape, attrs, dtype). ``numrecs`` and the record
-    size are derived for classic unlimited-dimension variables."""
-    from raquet_spark.sources.io import read_prefix
+    size are derived for classic unlimited-dimension variables.
 
-    buf = read_prefix(path, header_bytes)
-    if buf[:4] == b"\x89HDF":
-        from raquet_spark.sources.hdf5 import nc4_structure
+    A malformed classic header raises ``ValueError``: a bad list tag,
+    truncation, a count the remaining bytes cannot hold, an unknown
+    type, an out-of-range dimension id, a ``vsize`` that disagrees
+    with the variable's shape, or data (every record of a record
+    variable) running past the end of the file."""
+    from raquet_spark.sources.io import open_bytes
 
-        return nc4_structure(path)
-    if buf[:3] != b"CDF" or buf[3] not in (1, 2, 5):
+    buf = open_bytes(path)
+    try:
+        if buf[:4] != b"\x89HDF":
+            return _classic_structure(path, buf)
+    finally:
+        buf.close()
+    from raquet_spark.sources.hdf5 import nc4_structure
+
+    return nc4_structure(path)
+
+
+def _classic_structure(path: str, buf) -> dict:
+    """The CDF-1/CDF-2/CDF-5 half of :func:`read_netcdf_structure`."""
+    if buf[:3] != b"CDF" or buf[3:4] not in (b"\x01", b"\x02", b"\x05"):
         raise ValueError(
             "not a NetCDF file (neither classic CDF-1/CDF-2/CDF-5 nor "
             "NetCDF-4/HDF5 magic)"
@@ -130,30 +181,35 @@ def read_netcdf_structure(path: str, header_bytes: int = 1 << 20) -> dict:
     # CDF-5 (pnetcdf 64-bit data): every NON_NEG size/count/offset
     # widens to 64-bit and types 7-11 (unsigned + 64-bit ints) appear
     r = _Reader(buf, wide=version == 5)
+    nn = 8 if r.wide else 4
     r.pos = 4
     numrecs = r.nn()
 
-    tag = r.u32()
-    ndims = r.nn()
+    tag = r.tag(_NC_DIMENSION, "dimension")
+    ndims = r.count("dimensions", 2 * nn)
     dims: list[tuple[str, int]] = []
     if tag != _ABSENT:
-        assert tag == _NC_DIMENSION, f"bad dimension tag {tag}"
         for _ in range(ndims):
             dims.append((r.name(), r.nn()))
 
     gatts = _attr_list(r)
 
-    tag = r.u32()
-    nvars = r.nn()
+    tag = r.tag(_NC_VARIABLE, "variable")
+    # name, ndims, attribute list, nc_type, vsize, begin
+    nvars = r.count("variables", 4 * nn + 12)
     variables: dict[str, dict] = {}
     if tag != _ABSENT:
-        assert tag == _NC_VARIABLE, f"bad variable tag {tag}"
         for _ in range(nvars):
             name = r.name()
-            nd = r.nn()
+            nd = r.count("dimension ids", nn)
             dimids = [r.nn() for _ in range(nd)]
+            if any(i >= len(dims) for i in dimids):
+                raise ValueError(
+                    f"NetCDF variable {name!r}: dimension ids {dimids} "
+                    f"out of range for {len(dims)} dimensions"
+                )
             vatts = _attr_list(r)
-            nc_type = r.u32()
+            nc_type = r.nc_type()
             vsize = r.nn()
             begin = r.u64() if version in (2, 5) else r.u32()
             is_record = bool(dimids) and dims[dimids[0]][1] == 0
@@ -171,6 +227,8 @@ def read_netcdf_structure(path: str, header_bytes: int = 1 << 20) -> dict:
             }
     # record slab size = sum of record-var vsizes (classic interleaving)
     recsize = sum(v["vsize"] for v in variables.values() if v["record"])
+    for name, v in variables.items():
+        _check_extent(name, v, numrecs, recsize, len(buf), version)
     return {
         "path": path,
         "version": version,
@@ -180,6 +238,32 @@ def read_netcdf_structure(path: str, header_bytes: int = 1 << 20) -> dict:
         "variables": variables,
         "recsize": recsize,
     }
+
+
+def _check_extent(
+    name: str, v: dict, numrecs: int, recsize: int, size: int, version: int
+) -> None:
+    """``vsize`` is the variable's (per-record) byte count, padded to 4
+    (CDF-1/2 cap it at 2^32 - 1 for larger variables); its data, every
+    record of a record variable, must end inside the file. The pad of
+    the last variable is not required to be there."""
+    shape = v["shape"][1:] if v["record"] else v["shape"]
+    nbytes = np.dtype(v["dtype"]).itemsize * math.prod(shape)
+    capped = version != 5 and v["vsize"] == 0xFFFFFFFF and nbytes > v["vsize"]
+    if v["vsize"] not in (nbytes, nbytes + (-nbytes) % 4) and not capped:
+        raise ValueError(
+            f"NetCDF variable {name!r}: vsize {v['vsize']} disagrees with "
+            f"its shape {v['shape']} ({nbytes} bytes)"
+        )
+    end = v["begin"] + nbytes
+    if v["record"]:
+        # record k starts at begin + k * recsize; no records, no data
+        end = v["begin"] + (numrecs - 1) * recsize + nbytes if numrecs else v["begin"]
+    if end > size:
+        raise ValueError(
+            f"NetCDF variable {name!r}: data ends at byte {end}, past the "
+            f"end of the {size}-byte file"
+        )
 
 
 def read_coord_var(nc: dict, name: str) -> np.ndarray:

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from raquet_spark.sources.lzw import lzw_decode, packbits_decode
 
-from raquet_spark.core.metadata import BandMeta, build_metadata
+from raquet_spark.core.metadata import TILE_STAT_NAMES, BandMeta, build_metadata
 from raquet_spark.sources.geotiff import read_ifd
 
 
@@ -1828,6 +1828,7 @@ def _fused_gather_tiles(
     extra_key: str | None = None,
     dense: bool = False,
     resampling: str = "near",
+    stats: bool = False,
 ) -> DataFrame:
     """The gather builder: every tile of a near/bilinear/cubic import
     of ≤ 100 MB (:func:`_fused_gather_eligible`), with no join and no
@@ -1863,10 +1864,22 @@ def _fused_gather_tiles(
     HALF_UP ``round()`` replayed by :func:`_round_half_up_spark` for
     integer bands. A tile with no covered (near) or blended (kernel)
     pixel is emitted only when ``dense``, as the all-fill tile of the
-    join path's anti-join."""
+    join path's anti-join.
+
+    ``stats`` appends the ``{band}_{stat}`` columns after the bands,
+    computed on each storage-dtype tile before it is encoded — the
+    same :func:`~raquet_spark.operators.tile_stats.tile_stats_arrays`
+    math :func:`~raquet_spark.operators.tile_stats.with_tile_stats`
+    runs on the decoded blob, so no second Python pass gunzips what
+    this one just encoded."""
     from raquet_spark.core.metadata import parse_nodata
     from raquet_spark.functions import quadbin as qb
     from raquet_spark.functions.bands import DTYPES, encode_block
+    from raquet_spark.operators.tile_stats import (
+        stats_columns,
+        stats_schema,
+        tile_stats_arrays,
+    )
     from raquet_spark.session import ensure_package_shipped
 
     ensure_package_shipped(spark)
@@ -2006,6 +2019,19 @@ def _fused_gather_tiles(
     names = ["block"] + ([extra_key] if extra_key is not None else [])
     names += [name for name, _, _ in bands]
 
+    def new_out():
+        out = {n: [] for n in names}
+        if stats:
+            out.update({("stats", name): [] for name, _, _ in bands})
+        return out
+
+    def frame(out):
+        pdf = pd.DataFrame({n: out[n] for n in names})
+        if stats:
+            for name, _, _ in bands:
+                pdf = pdf.assign(**stats_columns(name, out[("stats", name)]))
+        return pdf
+
     def emit(out, tid, fx, fy, grids_b, tvals_b):
         tx, ty = tx0 + tid % ntx, ty0 + tid // ntx
         index = kernel_taps(fx, fy) if kernel else near_index(fx, fy)
@@ -2018,20 +2044,21 @@ def _fused_gather_tiles(
             out["block"].append(qb.py_tile_to_cell(tx, ty, z))
             if extra_key is not None:
                 out[extra_key].append(float(tvals_b[si]))
-            for name, btype, _ in bands:
-                out[name].append(
-                    encode_block(tiles[name].reshape(-1), btype, compression)
-                )
+            for name, btype, nodata in bands:
+                tile = tiles[name].reshape(-1)
+                if stats:
+                    out[("stats", name)].append(tile_stats_arrays(tile, nodata))
+                out[name].append(encode_block(tile, btype, compression))
 
     def build_axes(batches):
         grids_b, tvals_b, (fsx, fsy) = bvar.value
         for task_pdf in batches:
-            out = {n: [] for n in names}
+            out = new_out()
             for tid in task_pdf["id"].tolist():
                 x0, y0 = (tid % ntx) * bs, (tid // ntx) * bs
                 emit(out, tid, fsx[None, x0:x0 + bs], fsy[y0:y0 + bs, None],
                      grids_b, tvals_b)
-            yield pd.DataFrame(out)
+            yield frame(out)
 
     def build_stream(batches):
         # each run of bs² rows must be one tile, seen once: a split or
@@ -2040,7 +2067,7 @@ def _fused_gather_tiles(
         buf, seen = None, set()
         for pdf in batches:
             buf = pdf if buf is None else pd.concat([buf, pdf], ignore_index=True)
-            out = {n: [] for n in names}
+            out = new_out()
             while len(buf) >= bs * bs:
                 tile, buf = buf.iloc[:bs * bs], buf.iloc[bs * bs:]
                 tid = int(tile["_tid"].iloc[0])
@@ -2053,7 +2080,7 @@ def _fused_gather_tiles(
                 emit(out, tid, tile["fsx"].to_numpy("float64").reshape(bs, bs),
                      tile["fsy"].to_numpy("float64").reshape(bs, bs),
                      grids_b, tvals_b)
-            yield pd.DataFrame(out)
+            yield frame(out)
         if buf is not None and len(buf):
             raise ValueError(
                 "gather builder: the coordinate stream is not "
@@ -2064,6 +2091,8 @@ def _fused_gather_tiles(
         f"{n} {'bigint' if n == 'block' else 'double' if n == extra_key else 'binary'}"
         for n in names
     )
+    if stats:
+        schema += ", " + stats_schema([name for name, _, _ in bands])
     if separable:
         # ~8 tiles per task floor: a per-tile gather+encode is sub-ms,
         # so one task per tile at high core counts is pure scheduling
@@ -2388,7 +2417,11 @@ def import_tiles(
     join and aggregate branches ``dense`` adds an anti-join that fills
     every uncovered tile of the extent with one nodata blob (the gather
     builder emits those tiles itself). Then ``time_ts`` (``cf_time``)
-    and the per-tile stats (``stats``)."""
+    and the per-tile stats (``stats``): the gather builder computes
+    them on the tiles it encodes, so its import stays one Python pass;
+    the join and aggregate branches add them with
+    :func:`~raquet_spark.operators.tile_stats.with_tile_stats`. Either
+    way the ``{band}_{stat}`` columns come last, after ``time_ts``."""
     z = zoom if zoom is not None else _pick_zoom(info, block_size, zoom_strategy)
     # bounds = covering-tile extent at the target zoom (tile-aligned,
     # like the reference's union of mercantile tile bounds); the corner
@@ -2415,11 +2448,12 @@ def import_tiles(
             "staggered-grid source with kernel resampling "
             "(nearest only; re-grid first)"
         )
-    if _fused_gather_eligible(info, resampling, n_steps):
+    built = _fused_gather_eligible(info, resampling, n_steps)
+    if built:
         tiles = _fused_gather_tiles(
             spark, decode(driver_decode), info, z, block_size, tile_ext,
             meta, compression, extra_key=time_key, dense=dense,
-            resampling=resampling,
+            resampling=resampling, stats=stats,
         )
     else:
         from raquet_spark.operators.tiling import from_pixel_table
@@ -2497,7 +2531,14 @@ def import_tiles(
         from raquet_spark.operators.time_dim import with_time_ts
 
         tiles = with_time_ts(tiles, cf_time)
-    if stats:
+    if stats and built:
+        # the builder's stats columns go last, after time_ts, where
+        # with_tile_stats puts them
+        stat_cols = [f"{b.name}_{s}" for b in bands for s in TILE_STAT_NAMES]
+        tiles = tiles.select(
+            *[c for c in tiles.columns if c not in stat_cols], *stat_cols
+        )
+    elif stats:
         from raquet_spark.operators.tile_stats import with_tile_stats
 
         tiles = with_tile_stats(tiles, meta)

@@ -574,3 +574,62 @@ def test_builder_stream_rejects_non_contiguous_tiles(
     )
     with pytest.raises(Exception, match="not tile-contiguous"):
         tiles.collect()
+
+
+def _exact(rows):
+    # floats by bit pattern (-0.0 is not 0.0), NULL as None
+    return [
+        tuple(v.hex() if isinstance(v, float) else v for v in r)
+        for r in rows
+    ]
+
+
+@pytest.mark.parametrize(
+    "dtype, nodata",
+    [("<i2", -32767), ("<u2", 0), ("<f4", float("nan")), ("<f4", -9999.0),
+     ("<f8", None), ("<f8", float("nan"))],
+    ids=["int16", "uint16", "float32-nan", "float32-finite", "float64-none",
+         "float64-nan"],
+)
+def test_builder_stats_match_with_tile_stats(
+    spark, tmp_path, monkeypatch, dtype, nodata
+):
+    """The gather builder computes the per-tile stats on the tiles it
+    encodes; they must equal ``with_tile_stats`` over the same blobs —
+    names, types, order and every bit, over -0.0, NaN, ±inf, NaN and
+    finite nodata, and all-nodata tiles (NULL stats, count too)."""
+    import raquet_spark.operators.tile_stats as ts
+    from raquet_spark.core.metadata import TILE_STAT_NAMES
+    from raquet_spark.testing import GEOKEYS_4326, write_geokey_tiff
+
+    h, w = 150, 200
+    gy, gx = np.mgrid[0:h, 0:w]
+    vals = ((gx * 7 + gy * 11) % 1999).astype("f8")
+    if dtype[1] == "f":
+        vals = vals - 1000.0
+        vals[(gx + gy) % 13 == 0] = -0.0
+        vals[(gx * 3 + gy) % 29 == 0] = np.nan
+        vals[(gx + 5 * gy) % 31 == 0] = np.inf
+        vals[(gx + 7 * gy) % 37 == 0] = -np.inf
+    # the left half is void: whole tiles of nodata (or of NaN)
+    vals[:, : w // 2] = np.nan if nodata is None else nodata
+    path = str(tmp_path / "stats.tif")
+    write_geokey_tiff(
+        path, w, h, (-123.0, 38.0), 0.0005, GEOKEYS_4326,
+        dtype=dtype, nodata=nodata, values=vals, rows_per_strip=16,
+    )
+    monkeypatch.setattr(ts, "with_tile_stats", lambda *a, **k: pytest.fail(
+        "the builder branch ran a second stats pass"))
+    built, meta = tr.geotiff_to_raquet(spark, path, block_size=32, stats=True)
+    monkeypatch.undo()
+    stat_cols = [f"band_1_{s}" for s in TILE_STAT_NAMES]
+    ref = ts.with_tile_stats(built.drop(*stat_cols), meta)
+    assert [(f.name, f.dataType) for f in built.schema.fields] == [
+        (f.name, f.dataType) for f in ref.schema.fields
+    ]
+    assert built.columns[-len(stat_cols):] == stat_cols
+    got = _exact(built.orderBy("block").collect())
+    want = _exact(ref.orderBy("block").collect())
+    assert got == want
+    counts = [r[built.columns.index("band_1_count")] for r in got]
+    assert None in counts and any(c for c in counts)

@@ -422,6 +422,57 @@ def test_netcdf_import_two_shuffles(spark, tmp_path):
     assert count_exchanges(tiles) == 0
 
 
+def test_stats_import_one_python_pass(spark, standin_tifs):
+    """The gather builder computes the per-tile stats itself: an n37
+    stand-in import with ``stats=True`` is ONE MapInPandas, not the
+    builder plus a with_tile_stats pass over blobs it just encoded."""
+    from raquet_spark.sources.tiff_reader import geotiff_to_raquet
+
+    tiles, _ = geotiff_to_raquet(
+        spark, standin_tifs["dem"], block_size=128, stats=True
+    )
+    assert _plan(tiles).count("MapInPandas") == 1
+
+
+def test_pyramid_reads_its_native_import_once(spark, standin_tifs):
+    """build_pyramid lineage-truncates its native input: the returned
+    union holds no import MapInPandas (which would run the import again
+    for the union after the overview passes ran it)."""
+    from raquet_spark.operators.pyramid import build_pyramid
+    from raquet_spark.sources.tiff_reader import geotiff_to_raquet
+
+    tiles, meta = geotiff_to_raquet(
+        spark, standin_tifs["dem"], block_size=64, stats=True
+    )
+    assert "MapInPandas" in _plan(tiles)
+    z = meta["tiling"]["max_zoom"]
+    pyr, _ = build_pyramid(tiles, meta, min_zoom=z - 2)
+    assert "MapInPandas" not in _plan(pyr)
+
+
+def test_raster_value_cogroups_tiles_once(spark):
+    """raster_value co-groups points with tiles in Arrow: one
+    FlatMapCoGroupsInArrow, no per-row Arrow UDF, no broadcast of the
+    tile blobs."""
+    from raquet_spark.functions import quadbin as qb
+    from raquet_spark.operators.point_query import raster_value
+    from raquet_spark.testing import make_synthetic_raster
+
+    tiles, meta = make_synthetic_raster(
+        spark, zoom=5, tiles_x=2, tiles_y=2, origin_x=4, origin_y=6,
+        block_size=8,
+    )
+    w, s, e, n = qb.py_cell_to_bounds(qb.py_tile_to_cell(5, 7, 5))
+    pts = spark.createDataFrame(
+        [(i, w + (e - w) * i / 10, (s + n) / 2) for i in range(10)],
+        "id long, lon double, lat double",
+    )
+    plan = _plan(raster_value(tiles, pts, meta))
+    assert plan.count("FlatMapCoGroupsInArrow") == 1
+    assert "ArrowEvalPython" not in plan
+    assert "BroadcastExchange" not in plan
+
+
 def test_sharded_export_strip_plan_single_shuffle(spark):
     """The sharded export's pixel plan is one exchange (strip assembly)
     followed by the shard groupBy — the file writes happen inside the
